@@ -30,6 +30,7 @@ from dataclasses import asdict, dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -71,6 +72,19 @@ class ParquetCatalog:
             json.dump(manifest, f, indent=1, default=str)
         os.replace(tmp, self._manifest_path)
 
+    def _record(self, name: str, path: str, metrics: StageMetrics, **entry) -> None:
+        """Mark stage ``name`` complete at ``path`` and append its metrics."""
+        manifest = self._load_manifest()
+        manifest["stages"][name] = {
+            "path": path,
+            "config_hash": metrics.config_hash,
+            "rows_out": metrics.rows_out,
+            "finished_at": metrics.finished_at,
+            **entry,
+        }
+        manifest["metrics"].append(asdict(metrics))
+        self._save_manifest(manifest)
+
     # -- table ops -----------------------------------------------------------
 
     def path_of(self, name: str) -> str:
@@ -97,21 +111,15 @@ class ParquetCatalog:
     ) -> DataFrame:
         """Write a completed stage + record lineage; returns the re-read
         DataFrame (so downstream plans scan Parquet, cutting lineage —
-        the distributed analog of re-opening the memmap)."""
+        the distributed analog of re-opening the memmap).  The written
+        schema goes into the manifest, so reads need no footer-inference
+        job."""
         path = self.path_of(name)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        manifest = self._load_manifest()
-        manifest["stages"][name] = {
-            "path": path,
-            "config_hash": metrics.config_hash,
-            "rows_out": metrics.rows_out,
-            "finished_at": metrics.finished_at,
-        }
-        manifest["metrics"].append(asdict(metrics))
-        self._save_manifest(manifest)
+        self._record(name, path, metrics, schema=df.schema.json())
         return self.read(name)
 
     def write_bucketed(
@@ -150,18 +158,9 @@ class ParquetCatalog:
             .format("parquet")
             .saveAsTable(ident)
         )
-        manifest = self._load_manifest()
-        manifest["stages"][name] = {
-            "path": path,
-            "table_ident": ident,
-            "buckets": buckets,
-            "bucket_key": key,
-            "config_hash": metrics.config_hash,
-            "rows_out": metrics.rows_out,
-            "finished_at": metrics.finished_at,
-        }
-        manifest["metrics"].append(asdict(metrics))
-        self._save_manifest(manifest)
+        self._record(
+            name, path, metrics, table_ident=ident, buckets=buckets, bucket_key=key
+        )
         return self.read(name)
 
     def read(self, name: str) -> DataFrame:
@@ -171,7 +170,10 @@ class ParquetCatalog:
             # catalog table carries the bucket spec; a path read would
             # silently drop it and downstream joins would re-shuffle
             return self.spark.table(ident)
-        return self.spark.read.parquet(self.path_of(name))
+        reader = self.spark.read
+        if "schema" in entry:
+            reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))
+        return reader.parquet(self.path_of(name))
 
     def drop(self, name: str) -> None:
         import shutil
@@ -220,15 +222,7 @@ class IcebergCatalog(ParquetCatalog):
             for c in partition_by:
                 writer = writer.partitionedBy(c)
         writer.createOrReplace()
-        manifest = self._load_manifest()
-        manifest["stages"][name] = {
-            "path": self.fqn(name),
-            "config_hash": metrics.config_hash,
-            "rows_out": metrics.rows_out,
-            "finished_at": metrics.finished_at,
-        }
-        manifest["metrics"].append(asdict(metrics))
-        self._save_manifest(manifest)
+        self._record(name, self.fqn(name), metrics)
         return self.spark.read.table(self.fqn(name))
 
     def read(self, name):  # pragma: no cover

@@ -1,19 +1,23 @@
-"""Scalable global ranking (replaces single-partition windows).
+"""Scalable global ranking and running sums (no single-partition window).
 
 ``row_number() OVER (ORDER BY …)`` with no PARTITION BY collapses the
-whole relation into one task — fine at test scale, a bottleneck at
-10^12.  The classic two-pass pattern used here:
+whole relation into one task — a bottleneck at 10^12 rows.  Two passes
+instead:
 
-1. range-partition by the sort key + sort within partitions
-   (this is exactly what a global ``orderBy`` does physically);
-2. one small action collects per-partition row counts → cumulative
-   offsets (driver-side, #partitions entries);
-3. within-partition ``row_number`` (parallel window) + broadcast-joined
-   offset = the global rank.
+1. a global ``orderBy`` (AQE sizes its range-shuffle read by data
+   bytes), with the partition id ``_pid`` taken in the projection
+   directly above the sort, materialized by ``localCheckpoint``: the
+   leaf freezes range bounds and partition ids, and AQE exchange reuse
+   above a LogicalRDD works (above an InMemoryRelation it does not, in
+   Spark 4.1);
+2. one small action collects per-partition counts (or sums) into
+   cumulative offsets, shipped back as an array literal indexed by
+   ``_pid`` — an array, not a ``create_map`` lookup, which scans
+   linearly per row once there are thousands of partitions.
 
-The sorted frame is materialized (localCheckpoint) between the two
-passes so both read the same partitioning — the checkpointed leaf
-freezes the sampled range bounds and partition ids.
+No DataFrame here is built from a driver-side Python list: that goes
+through a Python RDD and starts a second Python worker pool beside the
+SQL UDF workers.
 """
 
 from __future__ import annotations
@@ -22,62 +26,56 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_global_rank(
-    df: DataFrame,
-    order_cols: list[Column],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Add a 1-based dense global ``rank_col`` ordered by
-    ``order_cols`` without a single-partition window.
-
-    The returned DataFrame is range-partitioned and sorted by the key
-    (so a downstream ``orderBy(rank)`` is a no-shuffle sort).
-
-    r6 pass-1 shape: the sort is a plain ``orderBy`` — AQE sizes the
-    range-shuffle read by DATA bytes (advisory partition size), so a
-    300-row ranking gets one partition and a 10¹²-row one gets
-    thousands, instead of the fixed ``spark.sql.shuffle.partitions``
-    fan-out the old ``repartitionByRange(n)`` pinned — and the sorted
-    frame is materialized with ``localCheckpoint`` rather than persist:
-    partition ids are frozen in the checkpointed leaf (the old persist
-    existed to pin sampled range bounds), pass 2's window plans against
-    a leaf instead of re-embedding the whole upstream tree, and AQE
-    exchange reuse above a LogicalRDD works (an InMemoryRelation in the
-    same spot defeats it in Spark 4.1).  An explicit ``num_partitions``
-    falls back to the pinned ``repartitionByRange`` for callers that
-    need a fixed layout.  Ranks are partitioning-independent because
-    every caller orders by a TOTAL order (tie-broken by id).
-    """
-    spark = df.sparkSession
-    if num_partitions is not None:
-        n_parts = max(1, min(num_partitions, 2000))
-        sorted_plan = df.repartitionByRange(
-            n_parts, *order_cols
-        ).sortWithinPartitions(*order_cols)
-    else:
-        sorted_plan = df.orderBy(*order_cols)
-    sorted_df = sorted_plan.withColumn(
-        "_pid", F.spark_partition_id()
+def _sorted_leaf(df: DataFrame, order_cols: list[Column], *tags: Column) -> DataFrame:
+    """Pass 1: ``df`` sorted, plus ``_pid`` and ``tags`` evaluated in the
+    projection directly above the sort, checkpointed."""
+    return df.orderBy(*order_cols).select(
+        "*", F.spark_partition_id().alias("_pid"), *tags
     ).localCheckpoint(eager=True)
-    counts = sorted_df.groupBy("_pid").count().collect()
-    offsets = {}
-    running = 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["count"]
-    offsets_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
-        )
+
+
+def _offsets(sorted_df: DataFrame, per_partition: Column) -> list[int]:
+    """Exclusive running total of ``per_partition`` (an aggregate) in
+    ``_pid`` order, one entry per partition id up to the largest
+    non-empty one."""
+    got = {
+        r["_pid"]: r["_n"]
+        for r in sorted_df.groupBy("_pid").agg(per_partition.alias("_n")).collect()
+    }
+    offsets, running = [], 0
+    for pid in range(max(got, default=0) + 1):
+        offsets.append(running)
+        running += got.get(pid) or 0
+    return offsets
+
+
+def _long_array(values: list[int]) -> Column:
+    """``values`` as one folded ``array<bigint>`` literal (a single SQL
+    expression — not one py4j literal per element)."""
+    return F.expr(f"array({', '.join(f'{v}L' for v in values)})")
+
+
+def with_global_rank(
+    df: DataFrame, order_cols: list[Column], rank_col: str = "rank"
+) -> DataFrame:
+    """Add a 1-based dense global ``rank_col`` ordered by ``order_cols``.
+
+    Pass 2 is a projection: ``rank = offset[_pid] + (_row − (_pid << 33))
+    + 1``, where ``_row`` is the ``monotonically_increasing_id`` taken
+    above the sort, whose low 33 bits count rows within the partition
+    (so at most 2^33 ≈ 8.6e9 rows per partition).  No window, no
+    ``_pid`` exchange, no join.  Rank grows with (partition index,
+    position), so the rows come out in rank order — collecting or
+    writing needs no ``orderBy(rank)``, and narrow operators on top keep
+    that order.  Ranks are partitioning-independent because every caller
+    orders by a TOTAL order (tie-broken by id).
+    """
+    sorted_df = _sorted_leaf(
+        df, order_cols, F.monotonically_increasing_id().alias("_row")
     )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    return (
-        sorted_df.withColumn("_local", F.row_number().over(w))
-        .join(offsets_df, "_pid")
-        .withColumn(rank_col, (F.col("_offset") + F.col("_local")).cast("long"))
-        .drop("_pid", "_local", "_offset")
-    )
+    offset = _long_array(_offsets(sorted_df, F.count(F.lit(1))))[F.col("_pid")]
+    local = F.col("_row") - F.shiftleft(F.col("_pid").cast("long"), 33)
+    return sorted_df.withColumn(rank_col, offset + local + 1).drop("_pid", "_row")
 
 
 def with_global_cumsum(
@@ -85,7 +83,6 @@ def with_global_cumsum(
     order_cols: list[Column],
     value_col: str,
     cumsum_col: str = "cumsum",
-    num_partitions: int | None = None,
     impl: str = "window",
 ) -> DataFrame:
     """Add an INCLUSIVE global running sum of ``value_col`` ordered by
@@ -119,33 +116,16 @@ def with_global_cumsum(
     from pyspark.sql.types import LongType, StructField, StructType
 
     spark = df.sparkSession
-    # same r6 pass-1 shape as with_global_rank: AQE-sized orderBy +
-    # localCheckpoint (see there); explicit num_partitions pins the
-    # old repartitionByRange layout
-    if num_partitions is not None:
-        n_parts = max(1, min(num_partitions, 2000))
-        sorted_plan = df.repartitionByRange(
-            n_parts, *order_cols
-        ).sortWithinPartitions(*order_cols)
-    else:
-        sorted_plan = df.orderBy(*order_cols)
-    sorted_df = sorted_plan.withColumn(
-        "_pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
-    sums = sorted_df.groupBy("_pid").agg(
-        F.sum(value_col).cast("long").alias("_s")
-    ).collect()
-    offsets = {}
-    running = 0
-    for row in sorted(sums, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["_s"]
+    sorted_df = _sorted_leaf(df, order_cols)
+    offsets = _offsets(sorted_df, F.sum(value_col).cast("long"))
 
     if impl == "window":
+        # the offsets table is built on the JVM (spark.range over the
+        # array literal), never from a driver-side list
         offsets_df = F.broadcast(
-            spark.createDataFrame(
-                [(pid, off) for pid, off in offsets.items()],
-                "_pid int, _offset long",
+            spark.range(len(offsets)).select(
+                F.col("id").cast("int").alias("_pid"),
+                _long_array(offsets)[F.col("id")].alias("_offset"),
             )
         )
         w = (

@@ -42,37 +42,36 @@ from selfclean_spark.functions import sketches
 from selfclean_spark.functions.rank import with_global_rank
 
 
+def _meta(metadata: DataFrame, suffix: str = "") -> DataFrame:
+    """The (id, repo, path, lang) result dimension, names suffixed."""
+    return metadata.select(
+        *(F.col(c).alias(c + suffix) for c in ("id", "repo", "path", "lang"))
+    )
+
+
 def near_duplicate_ranking(verified: DataFrame, metadata: DataFrame) -> DataFrame:
     """verified_edges → ranked pair table with metadata for both ends.
 
     Exact duplicates (dist 0) rank first — the reference's canonical
     planted-duplicate assertion (tests/.../test_embedding_distance.py:22-40).
     """
-    meta_a = metadata.select(
-        F.col("id").alias("id_a"),
-        F.col("repo").alias("repo_a"),
-        F.col("path").alias("path_a"),
-        F.col("lang").alias("lang_a"),
-    )
-    meta_b = metadata.select(
-        F.col("id").alias("id_b"),
-        F.col("repo").alias("repo_b"),
-        F.col("path").alias("path_b"),
-        F.col("lang").alias("lang_b"),
-    )
-    ranked = with_global_rank(
-        verified.select("id_a", "id_b", "dist", "jaccard", "substring"),
-        [F.col("dist").asc(), F.col("id_a").asc(), F.col("id_b").asc()],
+    # metadata is joined BEFORE ranking (inner joins on the full-universe
+    # id dimension: same rows), so the checkpointed rank leaf carries
+    # every output column and each consumer — fraction_cut's
+    # aggregation, the final write — reads the leaf, not the joins
+    pairs = (
+        verified.select("id_a", "id_b", "dist", "jaccard", "substring")
+        .join(_meta(metadata, "_a"), "id_a")
+        .join(_meta(metadata, "_b"), "id_b")
     )
     return (
-        ranked
-        .join(meta_a, "id_a")
-        .join(meta_b, "id_b")
+        with_global_rank(
+            pairs, [F.col("dist").asc(), F.col("id_a").asc(), F.col("id_b").asc()]
+        )
         .select(
             "rank", "id_a", "id_b", "dist", "jaccard", "substring",
             "repo_a", "path_a", "lang_a", "repo_b", "path_b", "lang_b",
         )
-        .orderBy("rank")
     )
 
 
@@ -105,15 +104,12 @@ def isolation_ranking(
         agree = np.where(self_mask, -1.0, agree)
         return pd.Series(1.0 - agree.max(axis=1))
 
-    ranked = with_global_rank(
-        signatures.select("id", iso_score("id", "minhash").alias("score")),
-        [F.col("score").desc(), F.col("id").asc()],
-    )
+    scored = signatures.select(
+        "id", iso_score("id", "minhash").alias("score")
+    ).join(_meta(metadata), "id")
     return (
-        ranked
-        .join(metadata.select("id", "repo", "path", "lang"), "id")
+        with_global_rank(scored, [F.col("score").desc(), F.col("id").asc()])
         .select("rank", "id", "score", "repo", "path", "lang")
-        .orderBy("rank")
     )
 
 
@@ -144,15 +140,17 @@ def lad_offtopic_ranking(
     dist = 1.0 - agree
     np.fill_diagonal(dist, 0.0)
     scores, order = lad_ranking(dist)
-    spark = signatures.sparkSession
-    ranked = spark.createDataFrame(
-        [
-            (int(rank + 1), int(ids[idx]), float(score))
-            for rank, (score, idx) in enumerate(zip(scores, order))
-        ],
+    # pandas → Arrow keeps the table on the JVM side (a driver-side
+    # list would go through a Python RDD and its own worker pool)
+    ranked = signatures.sparkSession.createDataFrame(
+        pd.DataFrame({
+            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
+            "id": ids[np.asarray(order, dtype=np.int64)],
+            "score": np.asarray(scores, dtype=np.float64),
+        }),
         "rank int, id long, score double",
     )
-    return ranked.join(metadata.select("id", "repo", "path", "lang"), "id").select(
+    return ranked.join(_meta(metadata), "id").select(
         "rank", "id", "score", "repo", "path", "lang"
     ).orderBy("rank")
 
@@ -232,13 +230,10 @@ def lang_mismatch_ranking(verified: DataFrame, metadata: DataFrame) -> DataFrame
     # engines (the DuckDB oracle twin computes the same products)
     sq_extra = F.col("min_extra") * F.col("min_extra")
     sq_intra = F.col("min_intra") * F.col("min_intra")
-    scored = agg.withColumn("score", sq_extra / (sq_intra + sq_extra))
-    ranked = with_global_rank(
-        scored, [F.col("score").asc(), F.col("id").asc()]
+    scored = agg.withColumn("score", sq_extra / (sq_intra + sq_extra)).join(
+        _meta(metadata), "id"
     )
     return (
-        ranked
-        .join(metadata.select("id", "repo", "path", "lang"), "id")
+        with_global_rank(scored, [F.col("score").asc(), F.col("id").asc()])
         .select("rank", "id", "score", "min_intra", "min_extra", "repo", "path", "lang")
-        .orderBy("rank")
     )

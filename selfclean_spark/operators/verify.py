@@ -61,6 +61,7 @@ from pyspark.sql.types import (
 )
 from pyspark.storagelevel import StorageLevel
 
+from selfclean_spark import caching
 from selfclean_spark.config import PipelineConfig, SignatureConfig
 from selfclean_spark.functions import sketches
 from selfclean_spark.functions.suffix import sa_contains, suffix_array
@@ -320,8 +321,10 @@ def verify_candidates(
     # shingle arrays: shingle once per candidate doc appearing in a
     # sha-differing pair; persisted because the pair plan joins it
     # on both sides
-    shingles = shingle_table(diff_sha, ingested, sig_cfg).persist(
-        StorageLevel.MEMORY_AND_DISK
+    shingles = caching.register_persist(
+        shingle_table(diff_sha, ingested, sig_cfg).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
     )
     sh_a = shingles.select(
         F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")
@@ -355,7 +358,9 @@ def _finish_verify(
         )
     else:
         # two consumers (threshold branch + rescue branch) share the plan
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
+        scored = caching.register_persist(
+            scored.persist(StorageLevel.MEMORY_AND_DISK)
+        )
         above = scored.filter(F.col("jaccard") >= F.lit(tau)).withColumn(
             "substring", F.col("sha_a") == F.col("sha_b")
         )

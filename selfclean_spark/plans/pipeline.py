@@ -16,9 +16,16 @@ stage whose checkpoint exists under the same config hash — re-running a
 killed job reproduces byte-identical outputs because every kernel is
 seeded and every table is keyed (no positional state).
 
-Per-stage metrics (north rule): rows in/out, skew ratio (max/avg rows
-per shuffle key of the stage's dominant key), shuffle bytes (from the
-Spark status API where available).
+Per-stage metrics (north rule) cost no Spark job of their own: rows
+out come from an Observation riding the checkpoint write; skew ratio
+(max/avg records written per task, worst stage) and shuffle-write
+bytes come from the app status store's task metrics of the write's
+jobs, found by job-id range.  The run's input row count is the same
+aggregation as the source sha fingerprint.
+
+Rankings (stage 6) join their metadata before the global rank, so each
+ranking is one checkpointed leaf that both its ``fraction_cut``
+aggregation and the final read scan (see ``functions.rank``).
 """
 
 from __future__ import annotations
@@ -26,10 +33,12 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from selfclean_spark import caching
 from selfclean_spark.catalog import ParquetCatalog, StageMetrics, now
 from selfclean_spark.config import PipelineConfig
 from selfclean_spark.operators import candidates as cand_ops
@@ -55,6 +64,65 @@ log = logging.getLogger(__name__)
 STAGES = ["signatures", "candidates", "verified_edges", "components"]
 
 
+def _fingerprint() -> list[Column]:
+    """(row count ``n``, xor of xxhash64(id, content_sha) ``fp``): a
+    multiset fingerprint of a relation's (id, sha) pairs."""
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.expr("bit_xor(xxhash64(id, content_sha))"), F.lit(0)).alias("fp"),
+    ]
+
+
+def _jobs_started(sc) -> int:
+    """Number of Spark jobs submitted so far = the id of the next one."""
+    return sc._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _job_stats(sc, first_job: int) -> tuple[float, int]:
+    """(skew ratio, shuffle-write bytes) of the Spark jobs from id
+    ``first_job`` on, read from the app status store's task metrics —
+    no extra job.  Skew is max/avg records written per task (parquet
+    rows in a result stage, shuffle records in a map stage), worst
+    stage wins; 1.0 when nothing was written."""
+    jsc = sc._jsc.sc()
+    try:
+        # the store is fed asynchronously by the listener bus
+        jsc.listenerBus().waitUntilEmpty()
+    except Py4JJavaError:  # busy bus: read what has arrived
+        pass
+    store = jsc.statusStore()
+    top = sc._gateway.new_array(sc._jvm.double, 1)
+    top[0] = 1.0
+    stages = set()
+    for job in range(first_job, _jobs_started(sc)):
+        try:
+            ids = store.job(job).stageIds()
+        except Py4JJavaError:  # evicted from the store
+            continue
+        stages.update(ids.apply(k) for k in range(ids.size()))
+    skew, shuffle_bytes = 1.0, 0
+    for sid in stages:
+        try:
+            sd = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # evicted from the store
+            continue
+        n_tasks = sd.numCompleteTasks()
+        if n_tasks == 0:  # skipped: its shuffle output was reused
+            continue
+        shuffle_bytes += sd.shuffleWriteBytes()
+        summary = store.taskSummary(sid, sd.attemptId(), top)
+        if not summary.isDefined():
+            continue
+        dist = summary.get()
+        for total, most in (
+            (sd.outputRecords(), dist.outputMetrics().recordsWritten()),
+            (sd.shuffleWriteRecords(), dist.shuffleWriteMetrics().writeRecords()),
+        ):
+            if total > 0:
+                skew = max(skew, most.apply(0) * n_tasks / total)
+    return skew, shuffle_bytes
+
+
 @dataclass
 class DedupPipeline:
     spark: SparkSession
@@ -64,58 +132,18 @@ class DedupPipeline:
 
     # ------------------------------------------------------------------ utils
 
-    def _shuffle_bytes(self) -> int:
-        """Total shuffle-write bytes so far (JVM status API; cumulative,
-        recorded per stage as a delta by the caller)."""
-        try:
-            tracker = self.spark.sparkContext._jsc.sc().statusTracker()
-            total = 0
-            for sid in tracker.getActiveStageIds():
-                info = tracker.getStageInfo(sid)
-                if info is not None:
-                    total += info.shuffleWriteBytes() if hasattr(info, "shuffleWriteBytes") else 0
-            return total
-        except Exception:  # status API shape varies; metrics are best-effort
-            return 0
-
     def _source_sha_fingerprint(self) -> tuple[int, int]:
         """(row count, xor of xxhash64(id, content_sha)) over the source
-        identity dimension — computed once per run and compared against
-        full-universe stage fingerprints (multiset equality w.h.p.)."""
-        if getattr(self, "_src_fp", None) is None:
-            row = self._id_sha.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.expr("bit_xor(xxhash64(id, content_sha))"), F.lit(0)
-                ).alias("fp"),
-            ).collect()[0]
-            self._src_fp = (int(row["n"]), int(row["fp"]))
-        return self._src_fp
-
-    @staticmethod
-    def _rows_and_skew(df: DataFrame, key_cols: list[str]) -> tuple[int, float]:
-        """(row count, max/avg rows per key) in ONE aggregation job —
-        the skew number the north rule asks for, without a second scan."""
-        if not key_cols:
-            return df.count(), 1.0
-        stats = (
-            df.groupBy(*key_cols)
-            .count()
-            .agg(
-                F.sum("count").alias("total"),
-                F.max("count").alias("mx"),
-                F.avg("count").alias("av"),
-            )
-            .collect()[0]
-        )
-        if not stats["av"]:
-            return 0, 1.0
-        return int(stats["total"]), float(stats["mx"]) / float(stats["av"])
+        identity dimension — ONE aggregation that is both the run's
+        input row count and the reference every full-universe stage
+        fingerprint is compared against (multiset equality w.h.p.)."""
+        row = self._id_sha.agg(*_fingerprint()).collect()[0]
+        return int(row["n"]), int(row["fp"])
 
     def _run_stage(
         self,
         name: str,
-        build,  # () -> (DataFrame, dict extra, list[str] skew_keys)
+        build,  # () -> (DataFrame, dict extra)
         rows_in: int,
         force: bool = False,
     ) -> DataFrame:
@@ -124,21 +152,14 @@ class DedupPipeline:
             log.info("stage %s: checkpoint hit, skipping", name)
             return self.catalog.read(name)
         started = now()
-        df, extra, skew_keys = build()
-        # sha256 invariant for full-universe stages rides the write action
-        # as an Observation (xor-fingerprint of (id, content_sha)) — zero
-        # extra jobs; compared against the source dimension's fingerprint
-        inv_obs: Observation | None = None
-        if self.assert_invariants and "content_sha" in df.columns:
-            inv_obs = Observation(f"{name}_sha_inv")
-            df = df.observe(
-                inv_obs,
-                F.count(F.lit(1)).alias("n"),
-                F.coalesce(
-                    F.expr("bit_xor(xxhash64(id, content_sha))"), F.lit(0)
-                ).alias("fp"),
-            )
-        shuffle_before = self._shuffle_bytes()
+        df, extra = build()
+        # the row count — and, for full-universe stages, the sha256
+        # invariant's xor-fingerprint of (id, content_sha) — ride the
+        # write action as an Observation: zero extra jobs
+        check_sha = self.assert_invariants and "content_sha" in df.columns
+        obs = Observation(f"{name}_stats")
+        df = df.observe(obs, *(_fingerprint() if check_sha else _fingerprint()[:1]))
+        first_job = _jobs_started(self.spark.sparkContext)
         t_build = now()
         out = self.catalog.write(
             name,
@@ -146,9 +167,9 @@ class DedupPipeline:
             StageMetrics(
                 stage=name,
                 rows_in=rows_in,
-                rows_out=-1,  # patched below (stats job over the checkpoint)
+                rows_out=-1,  # patched below, from the Observation
                 skew_ratio=-1.0,
-                shuffle_bytes=shuffle_before,
+                shuffle_bytes=0,
                 config_hash=cfg_hash,
                 started_at=started,
                 finished_at=now(),
@@ -158,6 +179,9 @@ class DedupPipeline:
             ),
         )
         t_write = now()
+        # the write's jobs are found by id range, not by job group (a
+        # caller's job group must stay untouched)
+        skew, shuffle_bytes = _job_stats(self.spark.sparkContext, first_job)
         # resolve any Observation placed in extra by the stage builder
         # (metrics collected during the write — no separate action)
         for key, val in list(extra.items()):
@@ -169,29 +193,25 @@ class DedupPipeline:
                 "stage %s: dropped %s hot band-buckets (max size %s)",
                 name, extra["dropped_band_buckets"], extra.get("max_bucket_size"),
             )
-        rows_out, skew = self._rows_and_skew(out, skew_keys)
-        t_stats = now()
-        if inv_obs is not None:
-            got = inv_obs.get
-            want_n, want_fp = self._source_sha_fingerprint()
-            if (got["n"], got["fp"]) != (want_n, want_fp):
-                raise AssertionError(
-                    f"stage {name}: sha256 invariant violation "
-                    f"(fingerprint {got} != source {(want_n, want_fp)})"
-                )
-        t_invariant = now()
+        got = obs.get
+        if check_sha and (got["n"], got["fp"]) != self._src_fp:
+            raise AssertionError(
+                f"stage {name}: sha256 invariant violation "
+                f"(fingerprint {got} != source {self._src_fp})"
+            )
         extra["phase_secs"] = {
             "build": round(t_build - started, 2),
             "write": round(t_write - t_build, 2),
-            "stats": round(t_stats - t_write, 2),
-            "invariant": round(t_invariant - t_stats, 2),
         }
         manifest = self.catalog._load_manifest()
-        manifest["stages"][name]["rows_out"] = rows_out
-        manifest["metrics"][-1]["rows_out"] = rows_out
-        manifest["metrics"][-1]["skew_ratio"] = skew
-        manifest["metrics"][-1]["extra"] = extra
-        manifest["metrics"][-1]["finished_at"] = now()
+        manifest["stages"][name]["rows_out"] = got["n"]
+        manifest["metrics"][-1].update(
+            rows_out=got["n"],
+            skew_ratio=skew,
+            shuffle_bytes=shuffle_bytes,
+            extra=extra,
+            finished_at=now(),
+        )
         self.catalog._save_manifest(manifest)
         return out
 
@@ -213,22 +233,23 @@ class DedupPipeline:
                 "spark.sql.shuffle.partitions", str(cfg.shuffle_partitions)
             )
 
-        n_input = code_files.count()
-
         # stage 0: ingest (virtual — deterministic projection, see STAGES)
         ingested = ingest_ops.with_identity(code_files)
-        self._ingested = ingested
         # the (id, sha) dimension backs every invariant check; pin the
         # narrow projection so each check doesn't re-hash the source
-        self._id_sha = (
+        self._id_sha = caching.register_persist(
             ingested.select("id", "content_sha").persist(StorageLevel.DISK_ONLY)
         )
+        # computed afresh every run: a second run() on another corpus
+        # must not compare against the first corpus's fingerprint
+        self._src_fp = self._source_sha_fingerprint()
+        n_input = self._src_fp[0]
         metadata = ingest_ops.metadata_of(ingested)
 
         # stage 1: signatures ---------------------------------------------
         signatures = self._run_stage(
             "signatures",
-            lambda: (sig_ops.compute_signatures(ingested, cfg.signature), {}, []),
+            lambda: (sig_ops.compute_signatures(ingested, cfg.signature), {}),
             rows_in=n_input,
             force=force,
         )
@@ -287,7 +308,7 @@ class DedupPipeline:
                     .alias("n_bands_hit"),
                 )
             )
-            return all_pairs, extra, ["id_a"]
+            return all_pairs, extra
 
         candidates = self._run_stage(
             "candidates", build_candidates, rows_in=n_input, force=force
@@ -295,7 +316,7 @@ class DedupPipeline:
 
         # stage 4: verification --------------------------------------------
         # rows_in comes from the candidates stage's manifest (patched by
-        # _run_stage's stats pass) — no extra count job over the checkpoint
+        # _run_stage from the write's Observation) — no count job
         cand_rows = self.catalog.rows_out("candidates")
 
         def build_verified():
@@ -318,7 +339,7 @@ class DedupPipeline:
                 ).alias("substring_rescued"),
                 F.avg("jaccard").alias("mean_jaccard"),
             )
-            return edges, {"verify_mix": mix}, ["id_a"]
+            return edges, {"verify_mix": mix}
 
         verified = self._run_stage(
             "verified_edges",
@@ -335,7 +356,7 @@ class DedupPipeline:
                 verified, cfg.cc_max_iterations
             )
             full = comp_ops.with_singletons(comps, ingested)
-            return full, {"cc_rounds": rounds}, ["component_id"]
+            return full, {"cc_rounds": rounds}
 
         components = self._run_stage(
             "components", build_components, rows_in=n_input, force=force
@@ -351,7 +372,7 @@ class DedupPipeline:
         # so each fraction_cut runs its fused single-aggregation path
         # instead of a count-then-quantile pair of jobs
         # an unknown edge count (manifest crash between checkpoint write
-        # and the stats patch leaves it unset) must NOT force the exact
+        # and the rows_out patch leaves it unset) must NOT force the exact
         # path — None lets fraction_cut's auto mode count first
         edge_rows = self.catalog.rows_out("verified_edges")
         pair_exact = (

@@ -1,5 +1,7 @@
 """Scalable-rank utility and hot-key cap behaviors."""
 
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,3 +94,106 @@ def test_with_global_cumsum_matches_single_partition_window(spark, impl):
     for r in rows:
         running += r.v
         assert got[r.id] == running
+
+
+def _dense_in_order(ranked, key_cols):
+    """The collected rows come out in rank order, ranks are 1..n, and
+    that order is the sort order of ``key_cols``."""
+    rows = ranked.collect()
+    assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+    keys = [tuple(r[c] for c in key_cols) for r in rows]
+    assert keys == sorted(keys)
+    return rows
+
+
+@contextmanager
+def _conf(spark, settings):
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+_AQE = "spark.sql.adaptive.enabled"
+_PARTS = "spark.sql.shuffle.partitions"
+# AQE coalescing into several uneven partitions instead of one
+_SMALL = {
+    _PARTS: "40",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8k",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k",
+}
+
+
+@pytest.mark.parametrize(
+    "settings, n_parts",
+    [
+        ({}, 1),  # AQE folds a small sort into one partition
+        ({_AQE: "false", _PARTS: "7"}, 7),
+        (_SMALL, None),  # AQE-coalesced: between 2 and 39
+    ],
+    ids=["aqe_one", "seven", "aqe_coalesced"],
+)
+def test_with_global_rank_projection_layouts(spark, settings, n_parts):
+    """Pass 2 is a projection (offset[_pid] + position in partition):
+    dense 1..n in collect order whatever the partitioning of the sort."""
+    with _conf(spark, settings):
+        df = spark.range(0, 3000, numPartitions=4).select(
+            F.col("id"), (F.xxhash64("id") % 50).alias("s")
+        )
+        ranked = with_global_rank(df, [F.col("s").asc(), F.col("id").asc()])
+        got = ranked.select(F.spark_partition_id()).distinct().count()
+        if n_parts is None:
+            assert 1 < got < 40, got
+        else:
+            assert got == n_parts
+        _dense_in_order(ranked, ["s", "id"])
+        plan = ranked._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and "Join" not in plan, plan
+
+
+def test_with_global_rank_empty_range_partitions(spark):
+    """More range partitions than distinct sort values leaves partitions
+    empty; ranks stay dense (ties here are in physical order)."""
+    with _conf(spark, {_AQE: "false", _PARTS: "16"}):
+        df = spark.range(0, 300).select(F.col("id"), (F.col("id") % 3).alias("s"))
+        ranked = with_global_rank(df, [F.col("s").asc()])
+        assert ranked.select(F.spark_partition_id()).distinct().count() <= 3
+        _dense_in_order(ranked, ["s"])
+
+
+def test_with_global_rank_ties_broken_by_id(spark):
+    """Equal scores are ordered by the id tie-break, across partitions."""
+    with _conf(spark, {_AQE: "false", _PARTS: "4"}):
+        df = spark.range(0, 200, numPartitions=5).select(
+            F.col("id"), F.lit(1.0).alias("score")
+        )
+        ranked = with_global_rank(df, [F.col("score").desc(), F.col("id").asc()])
+        rows = _dense_in_order(ranked, ["id"])
+    assert [r["id"] for r in rows] == list(range(200))
+
+
+def test_with_global_rank_empty_input(spark):
+    df = spark.range(0, 10).select(F.col("id"), F.lit(0.5).alias("s")).filter("id < 0")
+    ranked = with_global_rank(df, [F.col("s").asc(), F.col("id").asc()])
+    assert ranked.collect() == []
+    assert ranked.schema["rank"].dataType.typeName() == "long"
+
+
+def test_offsets_skip_empty_partition_ids(spark):
+    """A partition id with no rows still gets an offset entry (the one
+    of the next non-empty partition)."""
+    from selfclean_spark.functions.rank import _offsets
+
+    tagged = spark.range(0, 9).select(
+        F.when(F.col("id") < 5, 0).when(F.col("id") < 7, 3).otherwise(4).alias("_pid")
+    )
+    assert _offsets(tagged, F.count(F.lit(1))) == [0, 5, 5, 5, 7]
+    assert _offsets(tagged.filter("_pid < 0"), F.count(F.lit(1))) == [0]
