@@ -1,4 +1,5 @@
-"""Stage 2/3 — LSH candidate generation (the cross-join killer).
+"""Stage 2/3 — LSH candidate generation (the cross-join killer), and
+the capped inverted-index self-join every pair operator shares.
 
 Reference analog: the blocked N×N pairwise-distance cross join
 (selfclean/cleaner/selfclean_cleaner.py:121-146) and its approximate
@@ -9,23 +10,21 @@ hashes identically — probability 1-(1-s^r)^b of meeting at Jaccard s
 (≈0.99995 at s=0.8 with the default r=5/b=25), which buys the ≥0.99
 recall gate sub-quadratically.
 
-Physical design (one band shuffle, reused; codegen'd join expansion):
-
-    bands (id, band_hash)                   narrow, computed on the fly
-      → Exchange(band_hash)                 THE shuffle (16 B/row), once
-      → count window / cap filter / SHJ self-join   all off that shuffle
-      → (id_a < id_b) raw pair stream       whole-stage codegen
-      → groupBy(id_a, id_b) count           dedup across bands
+:func:`capped_self_join` is the one plan for every capped inverted
+index — LSH bands, n-gram / token / winnowing / block postings, SimHash
+blocks, file digests: a count window and the cap filter over one key
+shuffle, then a codegen'd shuffled-hash self-join off the same shuffle.
+:func:`capped_postings` is its cap alone, for callers that also count
+per-document sizes over the capped vocabulary.
 
 The band index is folded into ``band_hash`` by ``signatures.
 band_hashes`` (xxhash64 over the band's minhash elements + band_id),
-so the single long IS the bucket key — r3 dropped the redundant
-band_id column from the hottest exchange.  Buckets larger than
-``band_bucket_cap`` are emitted to a dropped-log instead of expanding
-(m² pairs from boilerplate/empty-file buckets) — never silent
-(SURVEY.md §4.2); rows in a dropped bucket still meet through their
-b-1 other bands, and verbatim duplicates are additionally guaranteed
-by the sha-equality fast path below.
+so the single long IS the bucket key.  Buckets larger than
+``band_bucket_cap`` never expand (m² pairs from boilerplate/empty-file
+buckets); they are counted in the ``observation`` instead — never
+silent (SURVEY.md §4.2).  Rows in a dropped bucket still meet through
+their b-1 other bands, and verbatim duplicates are additionally
+guaranteed by the sha-equality fast path below.
 
 Skew: the shuffle key is band_hash — uniform by construction (xxhash64
 of minhash values); the cap bounds any residual value skew, AQE
@@ -33,6 +32,8 @@ skew-join stays on as backstop for the later joins.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
@@ -44,149 +45,149 @@ _PAIR_EXPANSION = (
 )
 
 
+def _key_list(keys: str | Sequence[str]) -> list[str]:
+    return [keys] if isinstance(keys, str) else list(keys)
+
+
+def capped_postings(
+    postings: DataFrame, keys: str | Sequence[str], cap: int
+) -> DataFrame:
+    """Rows of ``postings`` whose key group has at most ``cap`` rows
+    (the classic df-cut: a key shared by f rows costs f² join rows).
+
+    The group size is a COUNT WINDOW over the one ``hash(keys)``
+    exchange, not a size aggregate + semi-join: a window partitioned by
+    the join key leaves its output partitioned by that key, so the size
+    count, the filter and any self-join on the same key (see
+    :func:`capped_self_join`) are all served by AQE exchange reuse from
+    ONE materialized shuffle, and whatever produced the postings (a
+    tokenizer, a sketch UDF) runs once with no persist.  A persist
+    below the window would break that reuse: InMemoryRelation subtrees
+    do not canonicalize equal in Spark 4.1.  Singleton keys are kept,
+    so per-document sizes counted from this frame see the whole capped
+    vocabulary."""
+    w = Window.partitionBy(*_key_list(keys))
+    return (
+        postings.withColumn("_key_n", F.count(F.lit(1)).over(w))
+        .filter(F.col("_key_n") <= cap)
+        .drop("_key_n")
+    )
+
+
+def capped_self_join(
+    postings: DataFrame,
+    keys: str | Sequence[str],
+    cap: int,
+    carry: Sequence[str] = (),
+    observation: Observation | None = None,
+) -> DataFrame:
+    """(id, keys..., carry...) postings → one ``(id_a < id_b)`` row per
+    shared key: columns ``keys..., id_a, <c>_a..., id_b, <c>_b...`` for
+    each carried column ``c``.  RAW, pre-deduplication — callers
+    aggregate per pair, so a pair sharing k keys arrives k times.
+
+    Physical shape (two operations keyed the same way share one
+    exchange):
+
+        postings → Exchange(hash(keys))              THE shuffle, once
+          ├─ Window count(*) over keys → 2 ≤ n ≤ cap → join side a
+          └─ Window count(*) over keys → 2 ≤ n ≤ cap → join side b
+                                  └── SHJ self-join → (id_a < id_b)
+
+    * Group sizing is the count window of :func:`capped_postings`, so
+      both join sides read the ONE materialized shuffle and the join
+      adds no exchange.  Single-row keys cannot pair and are filtered
+      with the over-cap ones.
+    * Expansion is a codegen'd shuffled-hash self-equi-join, not
+      collect_list + nested transform/slice lambdas: higher-order
+      Catalyst lambdas evaluate interpreted PER ELEMENT, which at the
+      measured ~200× LSH bucket amplification made the expansion the
+      stage bottleneck — the join streams the same m(m-1)/2 pairs per
+      group through whole-stage codegen at ~2× the throughput.  Side b
+      carries the ``shuffle_hash`` hint so neither the planner nor AQE
+      broadcasts a multi-hundred-MB build side (the GC-thrash mode
+      measured with the default planner); each per-partition build
+      side is bounded by the cap and the uniform key hash.
+    * Hot-key safety: the window count is evaluated before any pair is
+      emitted, so a degenerate key (empty files, license boilerplate at
+      10^6 copies) is filtered from BOTH join sides and never
+      materializes m² pairs.
+
+    ``observation``: an optional ``pyspark.sql.Observation`` attached to
+    join side a before the cap filter (evaluated exactly once) — after
+    the caller's first action it yields ``dropped_band_buckets`` (the
+    number of over-cap key groups) and ``max_bucket_size``, with zero
+    extra jobs.  Each over-cap group is counted on its ``min(id)`` row,
+    taken over the same window as the count.
+    """
+    keys = _key_list(keys)
+    cols = ["id", *keys, *carry]
+    w = Window.partitionBy(*keys)
+    n = F.count(F.lit(1)).over(w).alias("_key_n")
+    b = postings.select(*cols, n)
+    a = b
+    if observation is not None:
+        a = postings.select(
+            *cols, n, F.min("id").over(w).alias("_key_min")
+        ).observe(
+            observation,
+            F.coalesce(
+                F.sum(
+                    F.when(
+                        (F.col("_key_n") > cap)
+                        & (F.col("id") == F.col("_key_min")),
+                        1,
+                    )
+                ),
+                F.lit(0),
+            ).alias("dropped_band_buckets"),
+            F.coalesce(F.max("_key_n"), F.lit(0)).alias("max_bucket_size"),
+        )
+    in_cap = (F.col("_key_n") >= 2) & (F.col("_key_n") <= cap)
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.filter(in_cap).select(
+            *keys,
+            F.col("id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return (
+        side(a, "a")
+        .join(side(b, "b").hint("shuffle_hash"), keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
 def band_pair_stream(
     bands: DataFrame,
     band_bucket_cap: int,
     observation: Observation | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(id, band_hash) → RAW co-bucket pair stream, pre-deduplication.
-
-    One output row per (pair, band) co-occurrence — callers that need
-    per-pair band counts aggregate downstream (``candidate_pairs``), and
-    callers that fuse other edge sources into the same pair-level
-    groupBy (the pipeline unions sha-equality exact edges) avoid paying
-    a second full shuffle of the pair set (r3: the
-    aggregate-union-aggregate chain was two sequential pair exchanges).
-
-    Physical shape (r6 rework — guide §2.4 "two operations keyed the
-    same way can share one exchange"):
-
-        bands → Exchange(band_hash)                  THE shuffle, once
-          ├─ Window count(*) over band_hash → cap filter → join side a
-          └─ Window count(*) over band_hash → cap filter → join side b
-                                  └── SHJ self-join → (id_a < id_b)
-
-    * Bucket sizing is a COUNT WINDOW over the band exchange instead of
-      the r3 repartition→persist→groupBy→semi-join chain: the window's
-      partition key equals the join key, so its output partitioning
-      feeds the self-join directly and AQE stage reuse serves both join
-      sides from the ONE materialized shuffle.  This removes, per edge
-      query: the explicit ``repartition`` node, the block-manager cache
-      (write + bookkeeping + 3 cached reads of ~16 B/row × b bands —
-      at 10⁹ files a ~400 GB cache the shuffle files already hold), the
-      bucket-size aggregation exchange, and the capping semi-join.
-      Bucket membership is unchanged: the window count equals the old
-      groupBy count, and the 2 ≤ n ≤ cap filter keeps exactly the same
-      rows, so candidate sets — and every downstream fingerprint — are
-      bit-identical (A/B-verified at sf0.1 and against the DuckDB
-      oracles at sf0.001).
-    * Expansion is a codegen'd shuffled-hash self-equi-join, not
-      collect_list + nested transform/slice lambdas: higher-order
-      Catalyst lambdas evaluate interpreted PER ELEMENT, which at the
-      measured ~200× bucket amplification (27.8M co-bucket rows from
-      123k final pairs at the 300k bench corpus) made the expansion
-      itself the stage bottleneck — the join form streams the same
-      m(m-1)/2 pairs per bucket through whole-stage codegen at ~2× the
-      throughput, and the ``shuffle_hash`` hint keeps AQE from
-      broadcasting a multi-hundred-MB build side (the GC-thrash mode
-      measured with the default planner).
-    * Hot-key safety: the window count is evaluated before any pair is
-      emitted, so a degenerate key (empty files, license boilerplate at
-      10^6 copies) is filtered from BOTH join sides and never
-      materializes m² pairs.  Per-partition SHJ build sides are bounded
-      by the cap filter + uniform xxhash64 keys; AQE skew handling
-      stays on as backstop.
-
-    ``observation``: an optional ``pyspark.sql.Observation`` attached to
-    join side a's pre-filter stream (evaluated exactly once) — after the
-    caller's first action it yields ``dropped_band_buckets`` and
-    ``max_bucket_size`` with zero extra jobs.  The observed side orders
-    its window by ``id`` so a ``row_number() == 1`` row deterministically
-    represents each bucket; the count frame is pinned to the full
-    partition so ``bs`` is the whole-bucket size either way.
-
-    Returns ``(raw_pairs, dropped_log)`` — ``dropped_log`` is a lazy
-    sidecar relation (band_hash, bucket_size of every over-cap bucket);
-    reading it is a separate action, metrics-only callers should pass
-    ``observation`` instead.
-    """
-    keys = ["band_hash"]
-    w = Window.partitionBy(*keys)
-    in_cap = (F.col("bs") >= 2) & (F.col("bs") <= band_bucket_cap)
-    plain = bands.select(
-        "id", *keys, F.count(F.lit(1)).over(w).alias("bs")
-    )
-    if observation is not None:
-        wo = w.orderBy("id")
-        full = wo.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        a_src = (
-            bands.select(
-                "id",
-                *keys,
-                F.count(F.lit(1)).over(full).alias("bs"),
-                F.row_number().over(wo).alias("rn"),
-            )
-            .observe(
-                observation,
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            (F.col("bs") > band_bucket_cap) & (F.col("rn") == 1),
-                            1,
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("dropped_band_buckets"),
-                F.coalesce(F.max("bs"), F.lit(0)).alias("max_bucket_size"),
-            )
-            .filter(in_cap)
-        )
-    else:
-        a_src = plain.filter(in_cap)
-    b_src = plain.filter(in_cap)
-    raw = (
-        a_src.select(*keys, F.col("id").alias("id_a"))
-        .join(
-            b_src.select(*keys, F.col("id").alias("id_b")).hint("shuffle_hash"),
-            keys,
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    dropped = (
-        bands.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > band_bucket_cap)
-    )
-    return raw, dropped
+) -> DataFrame:
+    """(id, band_hash) → raw (id_a, id_b) co-bucket stream, one row per
+    shared band: :func:`capped_self_join` on ``band_hash``.  Callers
+    that fuse other edge sources into the same pair-level groupBy (the
+    pipeline unions sha-equality exact edges) consume this stream
+    instead of :func:`candidate_pairs`, so the pair set shuffles once."""
+    return capped_self_join(
+        bands, "band_hash", band_bucket_cap, observation=observation
+    ).select("id_a", "id_b")
 
 
 def candidate_pairs(
     bands: DataFrame,
     band_bucket_cap: int,
     observation: Observation | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(id, band_hash) → (candidate pairs, dropped-bucket log).
-
-    Thin aggregation over ``band_pair_stream`` (see there for the
-    hot-key/exchange-reuse story): per-pair band-hit counts for callers
-    that consume the deduplicated pair set directly.
-
-    Returns
-    -------
-    pairs : DataFrame(id_a, id_b, n_bands_hit) with id_a < id_b, distinct.
-    dropped : DataFrame(band_hash, bucket_size) — buckets over the cap,
-        for callers that want the detailed sidecar (reading it is a
-        separate action; metrics-only callers should pass
-        ``observation`` instead).
-    """
-    raw, dropped = band_pair_stream(bands, band_bucket_cap, observation)
-    pairs = raw.groupBy("id_a", "id_b").agg(
-        F.count(F.lit(1)).alias("n_bands_hit")
+) -> DataFrame:
+    """(id, band_hash) → candidate pairs (id_a, id_b, n_bands_hit) with
+    id_a < id_b, distinct: per-pair band-hit counts over
+    :func:`band_pair_stream`.  Pass ``observation`` for the
+    dropped-bucket accounting."""
+    return (
+        band_pair_stream(bands, band_bucket_cap, observation)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_bands_hit"))
     )
-    return pairs, dropped
 
 
 def incremental_candidate_pairs(

@@ -48,9 +48,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from selfclean_spark.operators import candidates as cand_ops
 from selfclean_spark.operators.ingest import fanout_few_files
 
 # Winnowing parameters — k-gram length, window width, polynomial base,
@@ -272,27 +273,13 @@ def winnow_clone_pairs(
                 F.array_distinct(F.expr("transform(_sel, x -> x.h)"))
             ).alias("h"),
         )
-    # df-cap via a count window over the ONE hash(h) exchange (r6, guide
-    # §2.4 — the band_pair_stream rework): the window's partition key
-    # equals the self-join key, so the per-doc size count and both join
-    # sides are served by AQE exchange reuse from a single materialized
-    # shuffle — the winnowing kernel runs once with no persist and no
-    # df-aggregate + semi-join chain (a persist here would break
-    # exchange reuse: InMemoryRelation subtrees do not canonicalize
-    # equal in Spark 4.1).  Capped postings are identical.
-    pruned = (
-        fps.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("h"))
-        )
-        .filter(F.col("df") <= max_doc_freq)
-        .drop("df")
+    sizes = (
+        cand_ops.capped_postings(fps, "h", max_doc_freq)
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n_fp"))
     )
-    sizes = pruned.groupBy("id").agg(F.count(F.lit(1)).alias("n_fp"))
-    a = pruned.select("h", F.col("id").alias("id_a"))
-    b = pruned.select("h", F.col("id").alias("id_b"))
     shared = (
-        a.join(b, "h")
-        .filter(F.col("id_a") < F.col("id_b"))
+        cand_ops.capped_self_join(fps, "h", max_doc_freq)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -368,28 +355,16 @@ def block_clone_pairs(
         .select("id", "_nb", "bh")
         .distinct()
     )
-    # df-cap via count window over the hash(bh) exchange (r6 — the
-    # band_pair_stream rework); both self-join sides reuse the shuffle
-    pruned = (
-        blocks.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("bh"))
-        )
-        .filter(F.col("df") <= max_doc_freq)
-        .drop("df")
-    )
-    a = pruned.select("bh", F.col("id").alias("id_a"), F.col("_nb").alias("nb_a"))
-    b = pruned.select("bh", F.col("id").alias("id_b"), F.col("_nb").alias("nb_b"))
     return (
-        a.join(b, "bh")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "nb_a", "nb_b")
+        cand_ops.capped_self_join(blocks, "bh", max_doc_freq, carry=["_nb"])
+        .groupBy("id_a", "id_b", "_nb_a", "_nb_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
         .select(
             "id_a",
             "id_b",
             "n_shared",
-            F.expr("n_shared * 1000000L div least(nb_a, nb_b)").alias(
+            F.expr("n_shared * 1000000L div least(_nb_a, _nb_b)").alias(
                 "coverage_ppm"
             ),
         )

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from selfclean_spark import caching
+from selfclean_spark.operators import candidates as cand_ops
 
 
 def _fingerprint(edges: DataFrame) -> tuple[int, int]:
@@ -266,17 +267,9 @@ def contracted_triangle_stats(
         .filter(F.length("tok_s") > 0)
         .select("id", F.xxhash64("tok_s").alias("tok"))
     )
-    # df-cut via count window over the one hash(tok) exchange (the
-    # band_pair_stream rework); both consumers (set collapse and the
-    # representative postings) are served by exchange reuse — no
-    # persist, no df-aggregate + semi-join
-    pruned = (
-        postings.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-        )
-        .filter(F.col("df") <= max_doc_freq)
-        .drop("df")
-    )
+    # df-cut served by the one hash(tok) exchange for both consumers
+    # (set collapse and the representative postings)
+    pruned = cand_ops.capped_postings(postings, "tok", max_doc_freq)
     # collapse identical capped sets: 128-bit set key over the sorted
     # token-hash list (collision-negligible; never leaves the executor)
     doc_sets = pruned.groupBy("id").agg(

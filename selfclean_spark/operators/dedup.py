@@ -114,27 +114,16 @@ def token_jaccard_pairs(
     postings = std.select(
         "id", F.explode(F.array_distinct(F.split(F.trim("content"), r"\s+"))).alias("tok")
     ).filter(F.length("tok") > 0)
-    # df-cut via a count window over the one hash(tok) exchange (r6,
-    # guide §2.4): the window's partition key equals the self-join key,
-    # so both join sides and the size count reuse a single materialized
-    # shuffle — no df-aggregate + semi-join chain, and the tokenize/
-    # explode pass runs once.  Capped postings are identical.
-    pruned = (
-        postings.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-        )
-        .filter(F.col("df") <= max_doc_freq)
-        .drop("df")
-    )
     # per-doc sizes over the CAPPED vocabulary — numerator and
     # denominator see the same token universe, so the result is the
     # exact Jaccard of the capped sets (not an underestimate)
-    doc_sizes = pruned.groupBy("id").agg(F.count(F.lit(1)).alias("n_tok"))
-    a = pruned.select("tok", F.col("id").alias("id_a"))
-    b = pruned.select("tok", F.col("id").alias("id_b"))
+    doc_sizes = (
+        cand_ops.capped_postings(postings, "tok", max_doc_freq)
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n_tok"))
+    )
     common = (
-        a.join(b, "tok")
-        .filter(F.col("id_a") < F.col("id_b"))
+        cand_ops.capped_self_join(postings, "tok", max_doc_freq)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
@@ -211,7 +200,7 @@ def minhash_lsh_pairs(
     if signatures is None:
         signatures = minhash_signatures(df, id_col, text_col, cfg)
     bands = sig_ops.band_hashes(signatures, cfg.signature)
-    pairs, _dropped = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
+    pairs = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
     return verify_ops.verify_candidates(pairs, std, signatures, cfg)
 
 
@@ -286,30 +275,13 @@ def simhash_pairs_from_sigs(
             )
         ).alias("block_id", "block_key"),
     )
-    keys = ["block_id", "block_key"]
-    # block-size cap via a count window over the one hash(block) exchange
-    # (r6, guide §2.4 — same rework as candidates.band_pair_stream): the
-    # window's partition keys equal the self-join keys, so both pair
-    # sides consume the window output partitioning directly and, absent
-    # a persist below, AQE exchange reuse materializes the block shuffle
-    # once.  Capped membership (2 ≤ n ≤ cap) is unchanged.
-    capped = (
-        blocks.withColumn(
-            "n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
-        )
-        .filter((F.col("n") >= 2) & (F.col("n") <= block_cap))
-        .drop("n")
-    )
-    a = capped.select(
-        *keys, F.col("id").alias("id_a"), F.col("simhash").alias("sim_a")
-    )
-    b = capped.select(
-        *keys, F.col("id").alias("id_b"), F.col("simhash").alias("sim_b")
-    )
     return (
-        a.join(b, keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.expr("cast(bit_count(sim_a ^ sim_b) as int)"))
+        cand_ops.capped_self_join(
+            blocks, ["block_id", "block_key"], block_cap, carry=["simhash"]
+        )
+        .withColumn(
+            "hamming", F.expr("cast(bit_count(simhash_a ^ simhash_b) as int)")
+        )
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()
@@ -341,25 +313,14 @@ def repo_fork_pairs(
     files = df.select(
         F.col(repo_col).alias("repo"), F.sha2(F.col(text_col), 256).alias("sha")
     ).distinct()
-    # df-cap via count window over the hash(sha) exchange (r6 — the
-    # band_pair_stream rework): both self-join sides reuse the one
-    # shuffle; capped membership unchanged
-    capped = (
-        files.withColumn(
-            "n", F.count(F.lit(1)).over(Window.partitionBy("sha"))
-        )
-        .filter((F.col("n") >= 2) & (F.col("n") <= file_df_cap))
-        .drop("n")
-    )
     sizes = files.groupBy("repo").agg(
         F.count(F.lit(1)).cast("long").alias("n_files")
     )
-    a = capped.select(F.col("repo").alias("repo_a"), "sha")
-    b = capped.select(F.col("repo").alias("repo_b"), "sha")
     shared = (
-        a.join(b, "sha")
-        .filter(F.col("repo_a") < F.col("repo_b"))
-        .groupBy("repo_a", "repo_b")
+        cand_ops.capped_self_join(
+            files.withColumnRenamed("repo", "id"), "sha", file_df_cap
+        )
+        .groupBy(F.col("id_a").alias("repo_a"), F.col("id_b").alias("repo_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

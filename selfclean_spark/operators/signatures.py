@@ -117,7 +117,7 @@ def band_hashes(signatures: DataFrame, cfg: SignatureConfig) -> DataFrame:
     a fresh ArrayData per band per row (b×N short-lived arrays on the
     hashing hot path), while the scalar form streams the r longs + the
     band index through one codegen'd hash call — measured ~2.5× on the
-    bands sub-plan (BENCH/profile_candidates.py).  Bucket equality
+    bands sub-plan.  Bucket equality
     classes are unchanged (two bands collide iff their r values and
     band index agree, either encoding), so candidate sets — and every
     downstream fingerprint — are identical.

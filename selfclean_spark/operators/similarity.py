@@ -31,40 +31,34 @@ _cosine = cosine_similarity
 
 # max rows per (table_id, bucket) sign-sketch bucket before the bucket
 # is dropped from the candidate join — the vector twin of the text
-# path's band_bucket_cap / simhash block_cap (count-first, logged via
-# the returned sizes, never an m² expansion).  Degenerate buckets are
-# dominated by identical/near-identical embedding families (zero
-# vectors, default embeddings), whose pairs the exact fast path below
-# recovers from full-vector equality.
+# path's band_bucket_cap / simhash block_cap (count-first, never an
+# m² expansion).  Degenerate buckets are dominated by identical/near-
+# identical embedding families (zero vectors, default embeddings),
+# whose pairs the exact fast path below recovers from full-vector
+# equality.
 DEFAULT_BUCKET_CAP = 2_000
 
 
 def _capped_signatures(
     sigs: DataFrame, bucket_cap: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(id, vec_sha, table_id, bucket) → (under-cap rows, dropped-bucket
-    log, the full signature stream — the exact-pair rescue reads the
-    latter: it must see rows in DROPPED buckets too).
+) -> tuple[DataFrame, DataFrame]:
+    """(id, vec_sha, table_id, bucket) → (under-cap rows, the full
+    signature stream — the exact-pair rescue reads the latter: it must
+    see rows in DROPPED buckets too).
 
-    Same count-first discipline as ``candidates.candidate_pairs``:
-    bucket sizes are aggregated FIRST (map-side combine absorbs hot
-    keys), over-cap keys are filtered out, and only then does the
-    self-join expand — a 10^6-copy embedding family can never create
-    10^12 candidate rows.  The size-filter join and the pair join share
-    the (table_id, bucket) key, so the exchange is reused.
-
-    Bucket sizing is a count WINDOW over the one hash(table_id, bucket)
-    exchange (r6 — the ``candidates.band_pair_stream`` rework): the
-    window's partition keys equal the self-join keys, so both pair
-    sides, and the exact-pair rescue's unfiltered read (third return —
-    it must see rows in DROPPED buckets too), are served by AQE
-    exchange reuse from that single materialized shuffle.  The
-    hyperplane matmul UDF therefore runs once, on the exchange's map
-    side, with no persist (a cached relation below the exchange would
-    BREAK exchange reuse — InMemoryRelation subtrees do not
-    canonicalize equal in Spark 4.1 — re-running the UDF per consumer).
-    The 8-byte ``vec_sha`` rides the same rows so the rescue still
-    costs no second corpus pass.
+    Same count-first discipline as ``candidates.capped_self_join``:
+    over-cap keys are filtered out before the self-join expands, so a
+    10^6-copy embedding family can never create 10^12 candidate rows.
+    This keeps its own count window instead of calling
+    ``capped_self_join`` because the rescue reads the UNFILTERED window
+    output: both pair sides and that read are served by AQE exchange
+    reuse from the one hash(table_id, bucket) shuffle.  The hyperplane
+    matmul UDF therefore runs once, on the exchange's map side, with no
+    persist (a cached relation below the exchange would BREAK exchange
+    reuse — InMemoryRelation subtrees do not canonicalize equal in
+    Spark 4.1 — re-running the UDF per consumer).  The 8-byte
+    ``vec_sha`` rides the same rows so the rescue still costs no second
+    corpus pass.
     """
     keys = ["table_id", "bucket"]
     plain = sigs.select(
@@ -76,13 +70,7 @@ def _capped_signatures(
     capped = plain.filter(
         (F.col("bs") >= 2) & (F.col("bs") <= bucket_cap)
     ).drop("bs")
-    all_rows = plain.drop("bs")
-    dropped = (
-        sigs.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > bucket_cap)
-    )
-    return capped, dropped, all_rows
+    return capped, plain.drop("bs")
 
 
 def _exact_vector_pairs(sigs_cached: DataFrame, pair_cap: int) -> DataFrame:
@@ -259,7 +247,7 @@ def lsh_topk(
     sigs = hyperplane_signatures(
         embeddings, dim, n_bits, n_tables, seed, id_col, vec_col
     )
-    capped, _dropped, sx = _capped_signatures(sigs, bucket_cap)
+    capped, sx = _capped_signatures(sigs, bucket_cap)
     a = capped.select("table_id", "bucket", F.col("id").alias("query_id"))
     b = capped.select("table_id", "bucket", F.col("id").alias("neighbor_id"))
     if exact_from_scan:
@@ -472,7 +460,7 @@ def embedding_cosine_dup_pairs(
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
     sigs = hyperplane_signatures(embeddings, dim, n_bits, n_tables, seed, id_col, vec_col)
-    capped, _dropped, sx = _capped_signatures(sigs, bucket_cap)
+    capped, sx = _capped_signatures(sigs, bucket_cap)
     a = capped.select("table_id", "bucket", F.col("id").alias("id_a"))
     b = capped.select("table_id", "bucket", F.col("id").alias("id_b"))
     exact = _exact_vector_pairs(sx, bucket_cap)

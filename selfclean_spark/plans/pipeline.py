@@ -262,7 +262,7 @@ class DedupPipeline:
             # table); _run_stage resolves it into the metrics sidecar
             # after the write — logged, never silent (SURVEY.md §4.2)
             dropped_obs = Observation("dropped_band_buckets")
-            raw, _dropped = cand_ops.band_pair_stream(
+            raw = cand_ops.band_pair_stream(
                 bands, cfg.band_bucket_cap, observation=dropped_obs
             )
             extra = {"band_buckets": dropped_obs}

@@ -253,32 +253,20 @@ def _ngram_pairs_from_postings(exploded: DataFrame) -> DataFrame:
     than re-tokenizing — the cache below the postings breaks AQE
     exchange reuse, materializing the posting shuffle once per
     consumer; see ``dedup_method_agreement``.)"""
-    # df-cut via a count window over the ONE hash(sh) exchange (r6,
-    # guide §2.4): the window's partition key equals the self-join key,
-    # so both join sides and the per-doc size count are served by AQE
-    # exchange reuse from a single materialized shuffle — the tokenize/
-    # explode pass runs once with no persist, no cache bookkeeping, and
-    # no df-count + semi-join chain.  Capped postings are identical
-    # (window count == groupBy count), so the pair set is unchanged.
-    shingled = (
-        exploded.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("sh"))
-        )
-        .filter(F.col("df") <= NGRAM_MAX_DOC_FREQ)
-        .drop("df")
+    postings = exploded.withColumnRenamed("doc_id", "id")
+    sizes = (
+        cand_ops.capped_postings(postings, "sh", NGRAM_MAX_DOC_FREQ)
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    sizes = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingled.select(F.col("doc_id").alias("id_a"), "sh")
-    b = shingled.select(F.col("doc_id").alias("id_b"), "sh")
     common = (
-        a.join(b, "sh")
-        .filter(F.col("id_a") < F.col("id_b"))
+        cand_ops.capped_self_join(postings, "sh", NGRAM_MAX_DOC_FREQ)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     return (
-        common.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
+        common.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
+        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
         .withColumn(
             "jaccard",
             F.col("n_common").cast("double")
@@ -2058,29 +2046,24 @@ def source_overlap_pairs(spark, sf_dir):
         )
     )
     grams = toks.select("source", F.explode(gram_arr).alias("h")).distinct()
-    capped = (
-        grams.withColumn(
-            "sdf", F.count(F.lit(1)).over(Window.partitionBy("h"))
-        )
-        .filter(F.col("sdf") <= OVERLAP_SOURCE_DF_CAP)
-        .drop("sdf")
+    postings = grams.withColumnRenamed("source", "id")
+    sizes = (
+        cand_ops.capped_postings(postings, "h", OVERLAP_SOURCE_DF_CAP)
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    sizes = capped.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    a = capped.select(F.col("source").alias("source_a"), "h")
-    b = capped.select(F.col("source").alias("source_b"), "h")
     shared = (
-        a.join(b, "h")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
+        cand_ops.capped_self_join(postings, "h", OVERLAP_SOURCE_DF_CAP)
+        .groupBy(
+            F.col("id_a").alias("source_a"), F.col("id_b").alias("source_b")
+        )
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
     sz_a = F.broadcast(
-        sizes.select(F.col("source").alias("source_a"), F.col("n").alias("n_a"))
+        sizes.select(F.col("id").alias("source_a"), F.col("n").alias("n_a"))
     )
     sz_b = F.broadcast(
-        sizes.select(F.col("source").alias("source_b"), F.col("n").alias("n_b"))
+        sizes.select(F.col("id").alias("source_b"), F.col("n").alias("n_b"))
     )
     jac = F.col("n_shared").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("n_shared")
@@ -2414,9 +2397,9 @@ def source_novelty_report(spark, sf_dir):
     grams = toks.select(
         "src_idx", "source", F.explode(gram_arr).alias("g")
     ).distinct()
-    # first-seen as a window min over the hash(g) exchange (r6 — the
-    # band_pair_stream pattern): one exchange + per-row compare instead
-    # of a min-aggregate + re-join on the gram key; values identical
+    # first-seen as a window min over the hash(g) exchange: one
+    # exchange + per-row compare instead of a min-aggregate + re-join
+    # on the gram key; values identical
     first_idx = F.min("src_idx").over(Window.partitionBy("g"))
     per_src = (
         grams.withColumn("first_idx", first_idx)

@@ -39,7 +39,7 @@ def test_candidates_plan_never_reads_content(tables):
     _cf, sigs = tables
     cfg = PipelineConfig()
     bands = sig_ops.band_hashes(sigs, cfg.signature)
-    pairs, _ = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
+    pairs = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
     plan = _plan(pairs)
     read_schemas = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schemas, "expected parquet scans in plan"
@@ -61,6 +61,24 @@ def test_candidates_plan_never_reads_content(tables):
     # expansion is the codegen'd shuffled-hash self-join, never a
     # broadcast of the multi-hundred-MB band table
     assert "BroadcastHashJoin" not in plan
+
+
+def test_block_clone_self_join_is_shuffled_hash(spark):
+    """The df-capped inverted-index sites share the candidates' join:
+    block_clone_pairs' self-join plans as ShuffledHashJoin, before and
+    after AQE, with no BroadcastExchange anywhere."""
+    from selfclean_spark.operators import codeclean as CC
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    df = CC.block_clone_pairs(docs, "doc_id", "text")
+    plan = _plan(df)
+    assert "ShuffledHashJoin" in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final, final
+    assert "ShuffledHashJoin" in final, final
+    assert "BroadcastExchange" not in final, final
 
 
 def test_metadata_join_prunes_content(tables):
@@ -103,7 +121,7 @@ def test_verify_plan_content_only_in_shingle_and_rescue(tables):
     cf, sigs = tables
     ing = with_identity(cf)
     bands = sig_ops.band_hashes(sigs, PipelineConfig().signature)
-    pairs, _ = cand_ops.candidate_pairs(bands, 200)
+    pairs = cand_ops.candidate_pairs(bands, 200)
 
     # no substring confirm: exactly ONE content-reading scan (the
     # shingle semi-join) and no per-pair content columns anywhere

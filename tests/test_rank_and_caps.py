@@ -1,12 +1,19 @@
 """Scalable-rank utility and hot-key cap behaviors."""
 
+from collections import defaultdict
 from contextlib import contextmanager
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from selfclean_spark.functions.rank import with_global_rank
-from selfclean_spark.operators.candidates import candidate_pairs, exact_duplicate_pairs
+from selfclean_spark.operators.candidates import (
+    candidate_pairs,
+    capped_postings,
+    capped_self_join,
+    exact_duplicate_pairs,
+)
 
 
 def test_with_global_rank_matches_sort(spark):
@@ -45,10 +52,67 @@ def test_exact_dup_star_edges_for_giant_groups(spark):
 def test_candidate_hot_bucket_dropped_and_logged(spark):
     rows = [(i, 7777) for i in range(30)] + [(100, 42), (101, 42)]
     bands = spark.createDataFrame(rows, "id long, band_hash long")
-    pairs, dropped = candidate_pairs(bands, band_bucket_cap=10)
+    obs = Observation("caps")
+    pairs = candidate_pairs(bands, band_bucket_cap=10, observation=obs)
     assert pairs.count() == 1  # only the small bucket pairs up
-    d = dropped.collect()
-    assert len(d) == 1 and d[0].bucket_size == 30
+    assert obs.get == {"dropped_band_buckets": 1, "max_bucket_size": 30}
+
+
+# (id, key, w) postings for the capped primitives at cap 4: key 1 has
+# exactly cap rows, key 2 has cap + 1, keys 3 and 4 are singletons, and
+# ids 30/31 share keys 5, 6 and 7
+CAP = 4
+POSTINGS = (
+    [(i, 1, 10 * i) for i in range(4)]
+    + [(10 + i, 2, i) for i in range(5)]
+    + [(20, 3, 0), (21, 4, 0)]
+    + [(i, k, i + k) for i in (30, 31) for k in (5, 6, 7)]
+)
+
+
+def _ref_groups(cap):
+    groups = defaultdict(list)
+    for row in POSTINGS:
+        groups[row[1]].append(row)
+    return {k: g for k, g in groups.items() if len(g) <= cap}
+
+
+def _ref_self_join(cap):
+    return sorted(
+        (k, a[0], a[2], b[0], b[2])
+        for k, g in _ref_groups(cap).items()
+        if len(g) >= 2
+        for a in g
+        for b in g
+        if a[0] < b[0]
+    )
+
+
+@pytest.mark.parametrize("keys", ["k", ["g", "k"]])
+def test_capped_self_join_matches_reference(spark, keys):
+    """One row per shared key with carried columns; a group of exactly
+    ``cap`` rows pairs up, one of ``cap + 1`` and singletons do not, and
+    the Observation counts the one over-cap group."""
+    postings = spark.createDataFrame(
+        [(i, 0, k, w) for i, k, w in POSTINGS], "id long, g int, k long, w long"
+    )
+    obs = Observation("caps")
+    out = capped_self_join(postings, keys, CAP, carry=["w"], observation=obs)
+    got = sorted(
+        (r.k, r.id_a, r.w_a, r.id_b, r.w_b) for r in out.collect()
+    )
+    assert got == _ref_self_join(CAP)
+    assert [g[1:3] for g in got if g[0] in (5, 6, 7)] == [(30, 35), (30, 36), (30, 37)]
+    assert obs.get == {"dropped_band_buckets": 1, "max_bucket_size": 5}
+
+
+def test_capped_postings_keeps_singletons(spark):
+    postings = spark.createDataFrame(POSTINGS, "id long, k long, w long")
+    got = sorted(tuple(r) for r in capped_postings(postings, "k", CAP).collect())
+    want = sorted(r for g in _ref_groups(CAP).values() for r in g)
+    assert got == want
+    assert (20, 3, 0) in got and (21, 4, 0) in got
+    assert not any(r[1] == 2 for r in got)
 
 
 def test_with_global_rank_registers_no_persist(spark):

@@ -124,3 +124,42 @@ def test_second_run_on_another_corpus(spark, tmp_path):
         assert manager["components"].count() == len(pdf)
         assert catalog.rows_out("signatures") == len(pdf)
     caching.clear(blocking=True)
+
+
+def test_manifest_counts_dropped_band_buckets(spark, tmp_path):
+    """A verbatim family of m files above ``band_bucket_cap`` fills one
+    bucket per LSH band: the candidates manifest records every one of
+    them as dropped with size m, and the sha-equality edges still join
+    the family into one component."""
+    import pandas as pd
+
+    m, cap = 30, 20
+    pdf = generate_code_files(n_rows=60, seed=11).code_files
+    body = "\n".join(f"def family_{i}(x):\n    return x * {i} + 7" for i in range(40))
+    family = pd.DataFrame(
+        {
+            "repo": "org9/family",
+            "path": [f"vendored/copy_{i}.py" for i in range(m)],
+            "commit": "f" * 12,
+            "lang": "python",
+            "content": body,
+        }
+    )[pdf.columns]
+    cfg = PipelineConfig(band_bucket_cap=cap)
+    catalog = ParquetCatalog(spark, str(tmp_path / "ckpt"))
+    manager = DedupPipeline(spark, catalog, cfg).run(
+        spark.createDataFrame(pd.concat([pdf, family], ignore_index=True))
+    )
+    extra = {m_["stage"]: m_ for m_ in catalog.all_metrics()}["candidates"]["extra"]
+    assert extra["dropped_band_buckets"] == cfg.signature.lsh_bands == 25
+    assert extra["max_bucket_size"] == m
+    comps = (
+        manager["components"]
+        .join(manager["metadata"].select("id", "path"), "id")
+        .filter("path like 'vendored/%'")
+        .select("component_id")
+        .distinct()
+        .count()
+    )
+    assert comps == 1
+    caching.clear(blocking=True)

@@ -170,7 +170,7 @@ def _batch_edges_for(spark, pdf, cfg):
 
     ingested = with_identity(spark.createDataFrame(pdf))
     sigs = compute_signatures(ingested, cfg.signature)
-    pairs, _ = cand_ops.candidate_pairs(
+    pairs = cand_ops.candidate_pairs(
         band_hashes(sigs, cfg.signature), cfg.band_bucket_cap
     )
     return verify_ops.verify_candidates(pairs, ingested, sigs, cfg)

@@ -26,6 +26,7 @@ TOUCHED = [
     "substring_containment_pairs",
     "dedup_method_agreement",
     "ngram_jaccard_pairs",
+    "token_jaccard_pairs",
     "winnow_clone_pairs",
     "block_clone_pairs",
     "repo_fork_pairs",
