@@ -19,7 +19,8 @@ Two concerns, one small module:
 
 Entries are invalidated automatically when the owning SparkSession is
 replaced (the cached plan would be unusable), and ``clear()`` drops
-everything eagerly — tests and bench call it between phases.
+everything eagerly, ``localCheckpoint`` blocks included — tests and
+bench call it between phases.
 """
 
 from __future__ import annotations
@@ -92,11 +93,24 @@ def peek(key: str, scope: str, spark: SparkSession) -> DataFrame | None:
     return None
 
 
+def release_checkpoints(df: DataFrame, blocking: bool = False) -> None:
+    """Free the blocks of every ``localCheckpoint`` leaf under ``df``.
+    ``df.unpersist()`` does not reach them: a checkpointed relation is a
+    LogicalRDD over a persisted RDD, not a cached plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(blocking)
+
+
 def clear(blocking: bool = False) -> None:
-    """Drop the memo table and unpersist everything registered."""
+    """Drop the memo table, unpersist everything registered and free
+    the checkpoint blocks the memoized relations read."""
     for _, df in _RESULTS.values():
         try:
             df.unpersist(blocking)
+            release_checkpoints(df, blocking)
         except Exception:
             pass
     _RESULTS.clear()

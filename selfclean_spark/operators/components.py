@@ -179,10 +179,13 @@ def connected_components(
     prev_fp = (-1, -1)
     rounds = 0
     for rounds in range(1, max_iterations + 1):
-        inp = cur.coalesce(_nparts(n_edges))
+        prev = cur
         cur, fp = _checkpoint_with_fingerprint(
-            _small_star(_large_star(inp)), f"cc_round_{rounds}"
+            _small_star(_large_star(prev.coalesce(_nparts(n_edges)))),
+            f"cc_round_{rounds}",
         )
+        # the new round is materialized: free the one it was built from
+        caching.release_checkpoints(prev)
         if fp == prev_fp:
             break
         prev_fp = fp

@@ -68,18 +68,6 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_dup_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """All (id_a < id_b) pairs with byte-identical content."""
-    std = _std(df, id_col, text_col).select(F.md5("content").alias("k"), "id")
-    a = std.select("k", F.col("id").alias("id_a"))
-    b = std.select("k", F.col("id").alias("id_b"))
-    return (
-        a.join(b, "k")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-
-
 def exact_components(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Connected components of the exact-dup graph — for byte equality
     these are simply min(id) per content group (one window, no

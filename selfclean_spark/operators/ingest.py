@@ -11,11 +11,6 @@ across runs and parallelism levels (SURVEY.md §7.4: never
 ``content_sha = sha2(content, 256)`` is the per-row invariant
 (BASELINE.json input_hint) asserted against the source at every later
 materialization.
-
-64-bit id collisions: negligible at test scale; at 10^12 rows the
-birthday bound (~3·10^10 pairs per 2^64) recommends the 128-bit variant
-``concat(xxhash64(r,p,c), xxhash64(r,p,c, lit(1)))`` — kept behind
-``wide_id`` for design completeness.
 """
 
 from __future__ import annotations
@@ -53,17 +48,11 @@ def fanout_few_files(df: DataFrame) -> DataFrame:
     return df
 
 
-def with_identity(code_files: DataFrame, wide_id: bool = False) -> DataFrame:
+def with_identity(code_files: DataFrame) -> DataFrame:
     """Add ``id`` and ``content_sha`` to the raw source relation."""
-    df = code_files.withColumn(
+    return code_files.withColumn(
         "id", F.xxhash64(F.col("repo"), F.col("path"), F.col("commit"))
     ).withColumn("content_sha", F.sha2(F.col("content"), 256))
-    if wide_id:
-        df = df.withColumn(
-            "id_hi",
-            F.xxhash64(F.col("repo"), F.col("path"), F.col("commit"), F.lit(1)),
-        )
-    return df
 
 
 def metadata_of(ingested: DataFrame) -> DataFrame:

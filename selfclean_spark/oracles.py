@@ -328,8 +328,8 @@ sc AS (
   FROM fit
 )
 SELECT id_a, id_b, round(s, 6) AS dist,
-       (s > 0 AND s < 1 AND ln(s / (1.0 - s)) < (SELECT cutoff FROM cut))
-         AS auto_issue
+       coalesce(ln(CASE WHEN s > 0 AND s < 1 THEN s / (1.0 - s) END)
+                  < (SELECT cutoff FROM cut), false) AS auto_issue
 FROM sc
 """
 

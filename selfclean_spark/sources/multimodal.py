@@ -103,39 +103,6 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     )
 
 
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling plumbing: emits one row per sampled frame
-    timestamp (decode stubbed — frame payload is the sliced source
-    bytes, deterministic).  Real decoder drop-in replaces the slice."""
-    frame_ts = F.explode(
-        F.sequence(
-            F.lit(0),
-            F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)),
-            F.lit(every_ms),
-        )
-    ).alias("frame_ts")
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("id", frame_ts, "data")
-        .withColumn(
-            "frame_data",
-            F.expr("substring(data, cast(frame_ts % 1024 as int) + 1, 64)"),
-        )
-        .drop("data")
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Typed-metadata aggregation over the opaque payloads — runs
-    entirely on metadata columns (never deserializes ``data``)."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.length("data")).alias("total_bytes"),
-        F.avg("width").alias("avg_width"),
-        F.avg("duration_ms").alias("avg_duration_ms"),
-    )
-
-
 def synth_media(spark, n_rows: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic fake media table for plumbing tests."""
     rng = np.random.default_rng(seed)

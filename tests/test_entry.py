@@ -216,3 +216,69 @@ def test_bench_headline_names_exist():
     q = set(e.queries())
     missing = [n for n in bench.HEADLINE if n not in q]
     assert not missing, missing
+
+
+def test_auto_cut_oracle_parity_on_verbatim_duplicate(spark, tmp_path):
+    """A pair at distance 0 is outside (0, 1), so both engines flag it
+    ``auto_issue = false``; the DuckDB twin must not take ln(0) on it.
+    Compared like ``tools/check_oracles.py``: rows and value hash."""
+    import duckdb
+    import pandas as pd
+
+    from selfclean_spark import caching
+    from tools.check_oracles import value_hash
+
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    copy = docs.iloc[[0]].assign(doc_id=docs["doc_id"].max() + 1)
+    pd.concat([docs, copy]).to_parquet(
+        tmp_path / "documents.parquet", index=False
+    )
+    sf = str(tmp_path)
+    try:
+        got = entry_mod.queries()["auto_cut_flags"](spark, sf).toPandas()
+    finally:
+        caching.clear()
+    assert ((got["dist"] == 0) & ~got["auto_issue"]).any()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf}/documents.parquet')"
+    )
+    want = con.execute(entry_mod.oracle_sql()["auto_cut_flags"]).fetch_df()
+    assert len(got) == len(want)
+    assert value_hash(got) == value_hash(want)
+
+
+def test_session_memo_drops_other_sessions(spark):
+    """One memo serves table readers and counts; a lookup drops the
+    entries of any other (stopped or replaced) session, and
+    ``caching.clear()`` keeps the readers (plans, not data)."""
+    from selfclean_spark import caching
+    from selfclean_spark import queries as Q
+
+    stale = ("reader", "/stale", "documents")
+    Q._SESSION_MEMO[stale] = (object(), None)
+    Q._t(spark, SF_DIR, "documents")
+    assert stale not in Q._SESSION_MEMO
+    caching.clear()
+    assert ("reader", SF_DIR, "documents") in Q._SESSION_MEMO
+
+
+def test_clear_frees_checkpoint_blocks(spark):
+    """``caching.clear()`` releases every block a memoized query made,
+    ``localCheckpoint`` ones included (``unpersist`` does not reach
+    those)."""
+    from selfclean_spark import caching
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    caching.clear(blocking=True)
+    before = persistent_ids()
+    entry_mod.queries()["minhash_components"](spark, SF_DIR).count()
+    created = persistent_ids() - before
+    assert created
+    caching.clear(blocking=True)
+    assert not persistent_ids() & created

@@ -29,11 +29,6 @@ def test_exact_dup_groups(docs):
     assert groups[0]["representative"] == 0
 
 
-def test_exact_dup_pairs(docs):
-    pairs = {(r.id_a, r.id_b) for r in D.exact_dup_pairs(docs, "doc_id", "text").collect()}
-    assert pairs == {(0, 1)}
-
-
 def test_exact_components(docs):
     comps = {r.id: r.component_id for r in D.exact_components(docs, "doc_id", "text").collect()}
     assert comps[0] == comps[1] == 0

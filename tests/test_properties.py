@@ -95,86 +95,3 @@ def test_minhash_monotone_under_union(vals):
     sig_half = sketches.minhash_signature(half, SEEDS).view(np.uint64)
     sig_full = sketches.minhash_signature(arr, SEEDS).view(np.uint64)
     assert np.all(sig_full <= sig_half)
-
-
-# -- stateful sessionization kernel ------------------------------------------
-
-class _FakeState:
-    """Minimal GroupState stand-in for driving _session_update off-Spark."""
-
-    def __init__(self):
-        self._v = None
-
-    hasTimedOut = False  # off-Spark driving never exercises eviction
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-    def remove(self):
-        self._v = None
-
-
-def _batch_sessions(ts, gap=1800):
-    """Straight-line batch sessionizer: (n_sessions, n_events, max)."""
-    sessions, cur = [], 0
-    last = None
-    for t in ts:
-        if last is None or t - last > gap:
-            if cur:
-                sessions.append(cur)
-            cur = 0
-        cur += 1
-        last = t
-    if cur:
-        sessions.append(cur)
-    return len(sessions), len(ts), max(sessions)
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=50_000), min_size=1, max_size=60),
-    st.data(),
-)
-@settings(max_examples=60, deadline=None)
-def test_session_update_invariant_under_batch_splits(ts, data):
-    """Splitting an in-order event stream into ANY number of batches
-    must produce the same per-user session stats as one batch — the
-    state (last_t, open-session length) has to carry everything."""
-    import pandas as pd
-
-    from selfclean_spark.streaming.windows import _session_update
-
-    ts = sorted(ts)
-    n_splits = data.draw(st.integers(min_value=0, max_value=3))
-    cuts = sorted(
-        data.draw(
-            st.lists(
-                st.integers(min_value=0, max_value=len(ts)),
-                min_size=n_splits, max_size=n_splits,
-            )
-        )
-    )
-    bounds = [0, *cuts, len(ts)]
-    state = _FakeState()
-    out = None
-    for lo, hi in zip(bounds, bounds[1:]):
-        if lo == hi:
-            continue
-        chunk = pd.DataFrame(
-            {"t": ts[lo:hi], "event_id": list(range(lo, hi))}
-        )
-        out = next(_session_update((7,), iter([chunk]), state))
-    assert out is not None
-    got = (
-        int(out["n_sessions"][0]),
-        int(out["n_events"][0]),
-        int(out["max_session_events"][0]),
-    )
-    assert got == _batch_sessions(ts)

@@ -38,23 +38,6 @@ def test_decode_image_stub_raises():
         MM.decode_image(b"not-an-image")
 
 
-def test_frame_sample(spark):
-    media = MM.synth_media(spark, n_rows=12)
-    frames = MM.frame_sample(media, every_ms=1000)
-    pdf = frames.toPandas()
-    videos = media.filter("kind = 'video'").select("id", "duration_ms").collect()
-    expected = sum(len(range(0, max(r.duration_ms - 1, 0) + 1, 1000)) for r in videos)
-    assert len(pdf) == expected
-    assert (pdf["frame_ts"] % 1000 == 0).all()
-    assert pdf["frame_data"].map(len).max() <= 64
-
-
-def test_media_stats_never_decodes(spark):
-    media = MM.synth_media(spark, n_rows=30)
-    stats = {r.kind: r.n for r in MM.media_stats(media).collect()}
-    assert sum(stats.values()) == 30
-
-
 # -- code_files reader --------------------------------------------------------
 
 def test_read_code_files_parquet(spark, tmp_path):
@@ -174,38 +157,3 @@ def _batch_edges_for(spark, pdf, cfg):
         band_hashes(sigs, cfg.signature), cfg.band_bucket_cap
     )
     return verify_ops.verify_candidates(pairs, ingested, sigs, cfg)
-
-
-def test_read_documents_jsonl_clean_and_rejects(spark, tmp_path):
-    """JSONL ingest: well-formed lines parse against the DECLARED
-    schema; syntactically-broken and semantically-incomplete lines land
-    in the reject relation with the raw line preserved — never silently
-    dropped, never fatal. A round-trip through the dedup entry point
-    proves the clean relation is pipeline-ready."""
-    from selfclean_spark.sources.jsonl import read_documents_jsonl
-
-    lines = [
-        '{"doc_id": 1, "text": "alpha beta gamma", "lang": "en", "source": "s0"}',
-        '{"doc_id": 2, "text": "alpha beta gamma", "lang": "en", "source": "s0"}',
-        '{"doc_id": 3, "text": "delta epsilon", "lang": "de", "source": "s1"}',
-        '{not valid json at all',
-        '{"doc_id": 4, "lang": "en", "source": "s1"}',  # missing text
-        '{"text": "no id", "lang": "en", "source": "s1"}',  # missing doc_id
-    ]
-    p = tmp_path / "docs.jsonl"
-    p.write_text("\n".join(lines) + "\n")
-    clean, rejects = read_documents_jsonl(spark, str(p))
-    got = {r.doc_id: r for r in clean.collect()}
-    assert set(got) == {1, 2, 3}
-    assert got[1].n_chars == len("alpha beta gamma")
-    rej = [r.line for r in rejects.collect()]
-    assert len(rej) == 3
-    assert any("not valid json" in x for x in rej)
-    # clean relation drives the dedup surface directly
-    from selfclean_spark.operators import dedup as D
-
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in D.exact_dup_pairs(clean, "doc_id", "text").collect()
-    }
-    assert pairs == {(1, 2)}
