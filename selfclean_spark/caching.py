@@ -7,7 +7,9 @@ Two concerns, one small module:
   branches); long-lived library sessions need a way to release those
   block-manager entries without ``spark.catalog.clearCache()``'s
   nuke-everything semantics.  Every operator-level ``persist`` is
-  registered here; ``unpersist_all()`` releases them.
+  registered here; ``unpersist_all()`` releases them.  A
+  ``localCheckpoint`` whose blocks outlive its operator (the final CC
+  round, every rank leaf) is registered too, and ``clear()`` frees it.
 
 * **Per-session query reuse** — the driver/query surface computes the
   documents-corpus verified-edge set (and its connected components) in
@@ -32,6 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 # persisted relations registered by operators (leak bookkeeping)
 _PERSISTED: list[DataFrame] = []
 
+# checkpointed relations whose blocks outlive the operator that built
+# them (a CC round's output, a rank leaf), freed by ``clear``
+_CHECKPOINTED: list[DataFrame] = []
+
 # (key, scope) -> (owning SparkSession, DataFrame)
 _RESULTS: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
@@ -53,6 +59,13 @@ def unpersist_all(blocking: bool = False) -> int:
         except Exception:  # session already stopped — nothing to free
             pass
     return n
+
+
+def register_checkpoint(df: DataFrame) -> DataFrame:
+    """Track a ``localCheckpoint``ed DataFrame so ``clear`` frees its
+    blocks (``unpersist_all`` does not count or touch it)."""
+    _CHECKPOINTED.append(df)
+    return df
 
 
 def get_or_build(
@@ -106,7 +119,7 @@ def release_checkpoints(df: DataFrame, blocking: bool = False) -> None:
 
 def clear(blocking: bool = False) -> None:
     """Drop the memo table, unpersist everything registered and free
-    the checkpoint blocks the memoized relations read."""
+    the checkpoint blocks the memoized and registered relations read."""
     for _, df in _RESULTS.values():
         try:
             df.unpersist(blocking)
@@ -114,4 +127,9 @@ def clear(blocking: bool = False) -> None:
         except Exception:
             pass
     _RESULTS.clear()
+    while _CHECKPOINTED:
+        try:
+            release_checkpoints(_CHECKPOINTED.pop(), blocking)
+        except Exception:  # session already stopped — nothing to free
+            pass
     unpersist_all(blocking)

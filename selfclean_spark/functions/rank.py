@@ -15,6 +15,12 @@ instead:
    ``_pid`` — an array, not a ``create_map`` lookup, which scans
    linearly per row once there are thousands of partitions.
 
+The pass-1 checkpoint is the one action that sees every row, so an
+aggregate a caller needs over the ranked rows rides it as an
+Observation (``observe=``): the pipeline's auto-cut fit
+(``operators.autoclean``) costs no job of its own.  The leaf is
+registered with ``caching``, and ``caching.clear()`` frees its blocks.
+
 No DataFrame here is built from a driver-side Python list: that goes
 through a Python RDD and starts a second Python worker pool beside the
 SQL UDF workers.
@@ -22,16 +28,33 @@ SQL UDF workers.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from selfclean_spark import caching
+from selfclean_spark.functions.worker import worker_task
 
-def _sorted_leaf(df: DataFrame, order_cols: list[Column], *tags: Column) -> DataFrame:
+# an Observation and its aggregates, computed by a rank leaf's checkpoint
+Observer = tuple[Observation, list[Column]]
+
+
+def _sorted_leaf(
+    df: DataFrame,
+    order_cols: list[Column],
+    *tags: Column,
+    observe: Observer | None = None,
+) -> DataFrame:
     """Pass 1: ``df`` sorted, plus ``_pid`` and ``tags`` evaluated in the
-    projection directly above the sort, checkpointed."""
-    return df.orderBy(*order_cols).select(
+    projection directly above the sort, checkpointed and registered for
+    ``caching.clear``.  ``observe`` (an Observation and its aggregates
+    over ``df``'s rows) rides the checkpoint action."""
+    leaf = df.orderBy(*order_cols).select(
         "*", F.spark_partition_id().alias("_pid"), *tags
-    ).localCheckpoint(eager=True)
+    )
+    if observe is not None:
+        obs, aggs = observe
+        leaf = leaf.observe(obs, *aggs)
+    return caching.register_checkpoint(leaf.localCheckpoint(eager=True))
 
 
 def _offsets(sorted_df: DataFrame, per_partition: Column) -> list[int]:
@@ -56,7 +79,10 @@ def _long_array(values: list[int]) -> Column:
 
 
 def with_global_rank(
-    df: DataFrame, order_cols: list[Column], rank_col: str = "rank"
+    df: DataFrame,
+    order_cols: list[Column],
+    rank_col: str = "rank",
+    observe: Observer | None = None,
 ) -> DataFrame:
     """Add a 1-based dense global ``rank_col`` ordered by ``order_cols``.
 
@@ -69,9 +95,14 @@ def with_global_rank(
     writing needs no ``orderBy(rank)``, and narrow operators on top keep
     that order.  Ranks are partitioning-independent because every caller
     orders by a TOTAL order (tie-broken by id).
+
+    ``observe``: an Observation and its aggregates over ``df``'s rows,
+    computed by the pass-1 checkpoint action (no job of its own) — the
+    auto-cut fit uses it (``operators.autoclean.fit_observation``).
     """
     sorted_df = _sorted_leaf(
-        df, order_cols, F.monotonically_increasing_id().alias("_row")
+        df, order_cols, F.monotonically_increasing_id().alias("_row"),
+        observe=observe,
     )
     offset = _long_array(_offsets(sorted_df, F.count(F.lit(1))))[F.col("_pid")]
     local = F.col("_row") - F.shiftleft(F.col("_pid").cast("long"), 33)
@@ -149,6 +180,7 @@ def with_global_cumsum(
         sorted_df.schema.fields + [StructField(cumsum_col, LongType(), False)]
     )
 
+    @worker_task
     def _cumsum(batches):
         run = None
         for pdf in batches:

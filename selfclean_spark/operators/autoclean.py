@@ -17,6 +17,15 @@ log(x/(1-x)) so no SciPy runs on executors — quantiles come from Spark
 (exact ``percentile`` at test scale, ``approxQuantile`` at scale, per
 SURVEY.md §7.4) and the two-point fit is driver arithmetic (C2/C3 in
 SURVEY.md §2.8).
+
+On the exact path the fit is ONE aggregation: the total and in-range
+counts and both ``percentile``s.  A caller that already runs an action
+over exactly the scored rows passes that aggregation along as an
+Observation (:func:`fit_observation`), and the fit costs no job: the
+pipeline's rankings observe it on their rank leaf's checkpoint
+(``functions.rank.with_global_rank``).  The approximate path above
+``EXACT_QUANTILE_MAX_ROWS`` in-range rows still counts first and runs
+``approxQuantile``.
 """
 
 from __future__ import annotations
@@ -24,7 +33,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -77,6 +86,43 @@ class FractionCut:
 EXACT_QUANTILE_MAX_ROWS = 10_000_000
 
 
+def _fit_probs(alpha: float, pair_scores: bool) -> tuple[float, float]:
+    """The two fit quantile levels (p, sqrt(p/2)); pair scores square
+    alpha (:102-105)."""
+    p1 = alpha**2 if pair_scores else alpha
+    return p1, (0.5 * p1) ** 0.5
+
+
+def _fit_aggregates(score_col: str, p1: float, p2: float) -> list[Column]:
+    """The exact path's one aggregation: counts + both fit quantiles
+    (percentile over the conditional logit ignores out-of-range nulls,
+    so no separate filtered pass is needed)."""
+    logit_if_in = (
+        f"if(({score_col} > 0) and ({score_col} < 1),"
+        f" ln({score_col} / (1.0 - {score_col})), null)"
+    )
+    return [
+        F.count(F.lit(1)).alias("m_total"),
+        F.count(
+            F.when((F.col(score_col) > 0) & (F.col(score_col) < 1), 1)
+        ).alias("m_in"),
+        F.expr(f"percentile({logit_if_in}, {p1})").alias("q1"),
+        F.expr(f"percentile({logit_if_in}, {p2})").alias("q2"),
+    ]
+
+
+def fit_observation(
+    score_col: str, alpha: float = 0.01, pair_scores: bool = False
+) -> tuple[Observation, list[Column]]:
+    """An Observation and the exact-path fit aggregation, to ride an
+    action the caller runs anyway over exactly the rows it later passes
+    to :func:`fraction_cut` (as ``fitted=``).  Same ``alpha`` and
+    ``pair_scores`` as that call."""
+    return Observation(), _fit_aggregates(
+        score_col, *_fit_probs(alpha, pair_scores)
+    )
+
+
 def fraction_cut(
     scores: DataFrame,
     score_col: str,
@@ -86,6 +132,7 @@ def fraction_cut(
     pair_scores: bool = False,
     exact_quantiles: bool | None = None,
     approx_rel_err: float = 1e-4,
+    fitted: Observation | None = None,
 ) -> tuple[DataFrame, FractionCut]:
     """Flag the low tail of ``score_col``; returns (scores + ``auto_issue``
     boolean column, fit diagnostics).
@@ -100,30 +147,20 @@ def fraction_cut(
     auto-selects — exact below ``EXACT_QUANTILE_MAX_ROWS`` in-range
     rows, approxQuantile above (both paths satisfy the §5.2.6
     invariance test).
-    """
-    if pair_scores:
-        alpha = alpha**2  # :102-105
-    p1 = alpha
-    p2 = (0.5 * alpha) ** 0.5
 
+    ``fitted``: the Observation of a :func:`fit_observation` that
+    already rode an action over ``scores``' rows — the exact path, with
+    no aggregation job here.
+    """
+    p1, p2 = _fit_probs(alpha, pair_scores)
+    aggs = _fit_aggregates(score_col, p1, p2)
     in_range_pred = (F.col(score_col) > 0) & (F.col(score_col) < 1)
     logit = F.log(F.col(score_col) / (1.0 - F.col(score_col)))
 
-    logit_if_in = (
-        f"if(({score_col} > 0) and ({score_col} < 1),"
-        f" ln({score_col} / (1.0 - {score_col})), null)"
-    )
-    if exact_quantiles is True:
+    if fitted is not None or exact_quantiles is True:
         # caller asserts the relation is small enough for exact
-        # percentile → ONE aggregation job: counts + both fit quantiles
-        # (percentile over the conditional logit ignores out-of-range
-        # nulls, so no separate filtered pass is needed)
-        row = scores.agg(
-            F.count(F.lit(1)).alias("m_total"),
-            F.count(F.when(in_range_pred, 1)).alias("m_in"),
-            F.expr(f"percentile({logit_if_in}, {p1})").alias("q1"),
-            F.expr(f"percentile({logit_if_in}, {p2})").alias("q2"),
-        ).collect()[0]
+        # percentile → ONE aggregation: counts + both fit quantiles
+        row = fitted.get if fitted is not None else scores.agg(*aggs).collect()[0]
         m_total, m_in = int(row["m_total"]), int(row["m_in"])
         if m_in < 2:
             out = scores.withColumn("auto_issue", F.lit(False))
@@ -132,10 +169,7 @@ def fraction_cut(
     else:
         # auto mode must learn m_in BEFORE deciding whether an exact
         # percentile is safe (it buffers all values) — count first
-        counts = scores.agg(
-            F.count(F.lit(1)).alias("m_total"),
-            F.count(F.when(in_range_pred, 1)).alias("m_in"),
-        ).collect()[0]
+        counts = scores.agg(*aggs[:2]).collect()[0]
         m_total, m_in = int(counts["m_total"]), int(counts["m_in"])
         if m_in < 2:
             out = scores.withColumn("auto_issue", F.lit(False))
@@ -143,10 +177,7 @@ def fraction_cut(
         if exact_quantiles is None:
             exact_quantiles = m_in <= EXACT_QUANTILE_MAX_ROWS
         if exact_quantiles:
-            row = scores.agg(
-                F.expr(f"percentile({logit_if_in}, {p1})").alias("q1"),
-                F.expr(f"percentile({logit_if_in}, {p2})").alias("q2"),
-            ).collect()[0]
+            row = scores.agg(*aggs[2:]).collect()[0]
             q1, q2 = float(row["q1"]), float(row["q2"])
         else:
             in_range = scores.filter(in_range_pred).withColumn("_logit", logit)

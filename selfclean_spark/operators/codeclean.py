@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from selfclean_spark.operators import candidates as cand_ops
+from selfclean_spark.functions.worker import worker_task
 from selfclean_spark.operators.ingest import fanout_few_files
 
 # Winnowing parameters — k-gram length, window width, polynomial base,
@@ -128,6 +129,7 @@ def _winnow_hashes_np(s: str) -> np.ndarray:
     return acc[np.unique(pos)]
 
 
+@worker_task
 def _winnow_report_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
@@ -153,6 +155,7 @@ def _winnow_report_batches(
         yield pd.DataFrame(out)
 
 
+@worker_task
 def _winnow_posting_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:

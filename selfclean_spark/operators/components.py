@@ -18,11 +18,18 @@ O(log² n) rounds on any graph, each round two shuffles
     small-star: every node links its smaller-or-equal neighbors to the
                 minimum of those.
 
-Convergence check: the edge multiset is fingerprinted with
-count + xor/sum of xxhash64(u, v); iteration stops when the fingerprint
-is stable (deterministic, one tiny aggregate per round — no
-``exceptAll`` shuffle).  ``localCheckpoint`` each round cuts lineage
-(SURVEY.md §4.2).
+Loop exit: each round is one ``localCheckpoint`` action (it cuts
+lineage, SURVEY.md §4.2), and two Observations ride it.  The first is
+the star-forest fixed-point test: a per-node window counts every
+node's out- and in-edges, and the loop ends on the first round whose
+edges form a min-rooted star forest.  The second is the edge multiset's
+fingerprint, count + xor of xxhash64(u, v); a round that repeats the
+previous fingerprint also ends the loop.  Neither test runs a job of
+its own.  At design scale the node window adds one exchange of 2|E|
+rows to a round's three; the groupBy + semi-join test it replaces
+shuffled the round's edges twice more, in four jobs of its own per
+round.  When the input is coalesced to one partition, no window needs
+an exchange and a round is one job.
 """
 
 from __future__ import annotations
@@ -35,29 +42,50 @@ from selfclean_spark import caching
 from selfclean_spark.operators import candidates as cand_ops
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
-def _checkpoint_with_fingerprint(
+def _checkpoint_round(
     edges: DataFrame, tag: str
-) -> tuple[DataFrame, tuple[int, int]]:
-    """Materialize one CC round (localCheckpoint, cuts lineage) and
-    collect its convergence fingerprint DURING that same action via an
-    Observation — one job per round instead of two."""
+) -> tuple[DataFrame, tuple[int, int], bool]:
+    """Materialize one CC round (localCheckpoint, cuts lineage) and, in
+    that same action, observe its convergence fingerprint and whether it
+    is a min-rooted star forest — the alternating algorithm's fixed point
+    (Kiveris et al. SoCC'14).  One job per round.
+
+    ``edges`` are oriented v < u by construction of ``_small_star``.
+    They form a star forest iff no node has two out-edges and no target
+    is also a source.  Each edge is seen at both endpoints (an out-row
+    at u, an in-row at v); one window per node counts both, and an
+    out-row breaks the star shape when its node has another out-edge or
+    any in-edge.  The in-rows are filtered away again, so the
+    checkpoint holds exactly the round's edges."""
+    ends = F.explode(
+        F.array(
+            F.struct(F.col("u").alias("node"), F.lit(True).alias("out")),
+            F.struct(F.col("v").alias("node"), F.lit(False).alias("out")),
+        )
+    ).alias("e")
+    w = Window.partitionBy("node")
+    annotated = (
+        edges.select("u", "v", ends)
+        .select("u", "v", "e.node", "e.out")
+        .select(
+            "u", "v", "out",
+            F.count(F.when(F.col("out"), 1)).over(w).alias("n_out"),
+            F.count(F.when(~F.col("out"), 1)).over(w).alias("n_in"),
+        )
+        .filter(F.col("out"))
+    )
     obs = Observation(tag)
-    observed = edges.observe(
+    observed = annotated.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+        F.count(
+            F.when((F.col("n_out") > 1) | (F.col("n_in") > 0), 1)
+        ).alias("breaks"),
     )
-    out = observed.localCheckpoint(eager=True)
+    out = observed.select("u", "v").localCheckpoint(eager=True)
     got = obs.get
-    return out, (int(got["n"]), int(got["h"]))
+    return out, (int(got["n"]), int(got["h"])), got["breaks"] == 0
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -108,27 +136,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _is_star_forest(edges: DataFrame) -> bool:
-    """True iff ``edges`` (all oriented v < u by construction of
-    ``_small_star``) is a min-rooted star forest — the alternating
-    algorithm's fixed point (Kiveris et al. SoCC'14).  Checking this on
-    the just-checkpointed round output ends the loop WITHOUT the extra
-    fingerprint-confirmation round the r1-r5 loop paid: one aggregate +
-    one semi-join over the (checkpointed, lineage-free) edge leaf vs a
-    full round's three shuffles + checkpoint.  Conservative: a False
-    here merely means one more round; the fingerprint-stability test
-    remains as backstop, so termination semantics are unchanged."""
-    per_u = edges.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-    multi = per_u.filter(F.col("c") > 1).select(F.lit(1).alias("x"))
-    # a target that is also a source ⇒ a chain, not a star
-    chained = (
-        edges.select(F.col("v").alias("u"))
-        .join(per_u, "u", "leftsemi")
-        .select(F.lit(1).alias("x"))
-    )
-    return multi.unionByName(chained).isEmpty()
-
-
 # edge rows are ~24 B (two longs + overhead); 32 MB per round-input
 # partition keeps every shuffle/window task meaningfully sized while
 # deriving the partition count from the OBSERVED edge count — at 25
@@ -142,7 +149,7 @@ def _nparts(n_rows: int) -> int:
 
 
 def connected_components(
-    edges: DataFrame, max_iterations: int = 50
+    edges: DataFrame, max_iterations: int = 50, n_rows: int | None = None
 ) -> tuple[DataFrame, int]:
     """(id_a, id_b) edge list → (id, component_id) with component_id =
     min id in the component; singletons are NOT emitted (callers join
@@ -154,14 +161,22 @@ def connected_components(
     count derived from the PREVIOUS round's observed edge count, so the
     first round no longer launches 64-partition-shaped stages over a
     handful of rows; and the loop exits via the star-forest fixed-point
-    test (:func:`_is_star_forest`) instead of paying one extra full
-    round to see the fingerprint repeat.  Fingerprint stability stays
-    as backstop — results are bit-identical to the r1-r5 loop (same
-    fixed point, pinned by the CC oracles and the local[1..32]
-    determinism test).
+    test observed on the round's own checkpoint
+    (:func:`_checkpoint_round`) instead of paying one extra full round
+    to see the fingerprint repeat.  Fingerprint stability stays as
+    backstop — results are bit-identical to the r1-r5 loop (same fixed
+    point, pinned by the CC oracles and the local[1..32] determinism
+    test).
+
+    ``n_rows``: the input's row count when the caller already knows it
+    (the pipeline reads it from the verified-edge manifest).  The
+    initial dedup then runs on a partition count derived from it, like
+    every round's input; on one partition it needs no exchange.
 
     Returns (components, rounds_used).
     """
+    if n_rows is not None:
+        edges = edges.coalesce(_nparts(n_rows))
     obs0 = Observation("cc_init")
     cur = (
         edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -180,18 +195,19 @@ def connected_components(
     rounds = 0
     for rounds in range(1, max_iterations + 1):
         prev = cur
-        cur, fp = _checkpoint_with_fingerprint(
+        cur, fp, star = _checkpoint_round(
             _small_star(_large_star(prev.coalesce(_nparts(n_edges)))),
             f"cc_round_{rounds}",
         )
         # the new round is materialized: free the one it was built from
         caching.release_checkpoints(prev)
-        if fp == prev_fp:
+        if star or fp == prev_fp:
             break
         prev_fp = fp
         n_edges = max(fp[0], 1)
-        if _is_star_forest(cur):
-            break
+    # the final round backs ``comps`` until the caller has written it;
+    # ``caching.clear`` frees it
+    caching.register_checkpoint(cur)
     # fixed point: every edge is (member → component-min)
     comps = cur.select(
         F.col("u").alias("id"), F.col("v").alias("component_id")

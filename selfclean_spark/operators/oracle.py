@@ -24,6 +24,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from selfclean_spark.config import SignatureConfig
 from selfclean_spark.functions import sketches
+from selfclean_spark.functions.worker import worker_task
 
 ORACLE_SCHEMA = StructType(
     [
@@ -59,6 +60,7 @@ def exact_all_pairs(
     )
     crossed = left.crossJoin(right).filter(F.col("id_a") < F.col("id_b"))
 
+    @worker_task
     def jaccard_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict[int, np.ndarray] = {}
 

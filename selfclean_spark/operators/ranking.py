@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from selfclean_spark.functions import sketches
-from selfclean_spark.functions.rank import with_global_rank
+from selfclean_spark.functions.rank import Observer, with_global_rank
+from selfclean_spark.functions.worker import worker_task
 
 
 def _meta(metadata: DataFrame, suffix: str = "") -> DataFrame:
@@ -49,16 +50,19 @@ def _meta(metadata: DataFrame, suffix: str = "") -> DataFrame:
     )
 
 
-def near_duplicate_ranking(verified: DataFrame, metadata: DataFrame) -> DataFrame:
+def near_duplicate_ranking(
+    verified: DataFrame, metadata: DataFrame, observe: Observer | None = None
+) -> DataFrame:
     """verified_edges → ranked pair table with metadata for both ends.
 
     Exact duplicates (dist 0) rank first — the reference's canonical
     planted-duplicate assertion (tests/.../test_embedding_distance.py:22-40).
+    ``observe`` rides the rank leaf's checkpoint (``with_global_rank``).
     """
     # metadata is joined BEFORE ranking (inner joins on the full-universe
     # id dimension: same rows), so the checkpointed rank leaf carries
-    # every output column and each consumer — fraction_cut's
-    # aggregation, the final write — reads the leaf, not the joins
+    # every output column and the final write reads the leaf, not the
+    # joins
     pairs = (
         verified.select("id_a", "id_b", "dist", "jaccard", "substring")
         .join(_meta(metadata, "_a"), "id_a")
@@ -66,7 +70,9 @@ def near_duplicate_ranking(verified: DataFrame, metadata: DataFrame) -> DataFram
     )
     return (
         with_global_rank(
-            pairs, [F.col("dist").asc(), F.col("id_a").asc(), F.col("id_b").asc()]
+            pairs,
+            [F.col("dist").asc(), F.col("id_a").asc(), F.col("id_b").asc()],
+            observe=observe,
         )
         .select(
             "rank", "id_a", "id_b", "dist", "jaccard", "substring",
@@ -76,10 +82,14 @@ def near_duplicate_ranking(verified: DataFrame, metadata: DataFrame) -> DataFram
 
 
 def isolation_ranking(
-    signatures: DataFrame, metadata: DataFrame, n_anchors: int = 256
+    signatures: DataFrame,
+    metadata: DataFrame,
+    n_anchors: int = 256,
+    observe: Observer | None = None,
 ) -> DataFrame:
     """Anchor-distance isolation score, descending (rank 1 = most
-    isolated ≙ off-topic rank 1, tests/.../test_lad_scoring.py:9-19)."""
+    isolated ≙ off-topic rank 1, tests/.../test_lad_scoring.py:9-19).
+    ``observe`` rides the rank leaf's checkpoint."""
     anchors = (
         signatures.select("id", "minhash")
         .orderBy(F.xxhash64("id"))
@@ -93,6 +103,7 @@ def isolation_ranking(
     b_mat = spark.sparkContext.broadcast(anchor_mat)
 
     @F.pandas_udf(DoubleType())
+    @worker_task
     def iso_score(ids: pd.Series, minhash: pd.Series) -> pd.Series:
         amat = b_mat.value  # (A, P)
         aids = b_ids.value
@@ -108,7 +119,9 @@ def isolation_ranking(
         "id", iso_score("id", "minhash").alias("score")
     ).join(_meta(metadata), "id")
     return (
-        with_global_rank(scored, [F.col("score").desc(), F.col("id").asc()])
+        with_global_rank(
+            scored, [F.col("score").desc(), F.col("id").asc()], observe=observe
+        )
         .select("rank", "id", "score", "repo", "path", "lang")
     )
 
@@ -198,7 +211,9 @@ def knn_edges(verified: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def lang_mismatch_ranking(verified: DataFrame, metadata: DataFrame) -> DataFrame:
+def lang_mismatch_ranking(
+    verified: DataFrame, metadata: DataFrame, observe: Observer | None = None
+) -> DataFrame:
     """Intra/extra-distance label-error analog over verified edges.
 
     Returns every id that has at least one verified edge, scored
@@ -206,7 +221,7 @@ def lang_mismatch_ranking(verified: DataFrame, metadata: DataFrame) -> DataFrame
     verbatim clone exists under a different lang).  Ids with no edges
     carry no signal — the reference's "can't detect label errors"
     warning cases (intra_extra_distance_mixin.py:48-53) — and are
-    omitted.
+    omitted.  ``observe`` rides the rank leaf's checkpoint.
     """
     lang_dim = metadata.select("id", "lang")
     edges = (
@@ -234,6 +249,8 @@ def lang_mismatch_ranking(verified: DataFrame, metadata: DataFrame) -> DataFrame
         _meta(metadata), "id"
     )
     return (
-        with_global_rank(scored, [F.col("score").asc(), F.col("id").asc()])
+        with_global_rank(
+            scored, [F.col("score").asc(), F.col("id").asc()], observe=observe
+        )
         .select("rank", "id", "score", "min_intra", "min_extra", "repo", "path", "lang")
     )

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from selfclean_spark.config import SignatureConfig
 from selfclean_spark.functions import sketches
+from selfclean_spark.functions.worker import worker_task
 
 SIGNATURE_SCHEMA = StructType(
     [
@@ -64,6 +65,7 @@ def compute_signatures(
     """
     perm_seeds = sketches.minhash_seeds(cfg.num_perm, cfg.seed)
 
+    @worker_task
     def sign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
@@ -159,6 +161,7 @@ def compute_simhash(ingested: DataFrame, cfg: SignatureConfig) -> DataFrame:
     64-bit fingerprint without paying the MinHash-128 kernel (which is
     ~100× the per-shingle work of the single SimHash pass)."""
 
+    @worker_task
     def sim_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             contents = pdf["content"].to_numpy()

@@ -23,6 +23,7 @@ from pyspark.sql.types import ArrayType, LongType
 from pyspark.storagelevel import StorageLevel
 
 from selfclean_spark.functions.distances import cosine_similarity, get_distance
+from selfclean_spark.functions.worker import worker_task
 from selfclean_spark.operators import candidates as cand_ops
 
 # native cosine similarity between two array<float/double> cols
@@ -187,6 +188,7 @@ def hyperplane_signatures(
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
     @F.pandas_udf(ArrayType(LongType()))
+    @worker_task
     def bucket_arr(vecs: pd.Series) -> pd.Series:
         mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (B, dim)
         signs = (mat @ planes.T) >= 0.0  # (B, T*bits)
@@ -327,6 +329,7 @@ def ivf_centroids(
         planes = cents  # closure snapshot for this round
 
         @F.pandas_udf("int")
+        @worker_task
         def assign(vecs: pd.Series) -> pd.Series:
             m = np.stack(vecs.to_numpy()).astype(np.float64)
             nrm = np.linalg.norm(m, axis=1, keepdims=True)
@@ -389,6 +392,7 @@ def ivf_topk(
     )
 
     @F.pandas_udf("int")
+    @worker_task
     def nearest_cell(vecs: pd.Series) -> pd.Series:
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -399,6 +403,7 @@ def ivf_topk(
     n_probe_eff = min(n_probe, len(cents))
 
     @F.pandas_udf(ArrayType(LongType()))
+    @worker_task
     def probe_cells(vecs: pd.Series) -> pd.Series:
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
         norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -571,6 +576,7 @@ def semdedup_prune(
     icents = _quant_i64(fcents, quant_scale)
 
     @F.pandas_udf("int")
+    @worker_task
     def cell_of(vecs: pd.Series) -> pd.Series:
         m = np.stack(vecs.to_numpy()).astype(np.float64)
         iv = _quant_i64(m, quant_scale)
@@ -583,6 +589,7 @@ def semdedup_prune(
     group_cap = max(int(cell_rows_cap), cap)
     out_schema = "id long, cell int, keep boolean"
 
+    @worker_task
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("id").reset_index(drop=True)
         m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
@@ -608,6 +615,7 @@ def semdedup_prune(
             {"id": pdf["id"], "cell": pdf["cell"], "keep": keep}
         )
 
+    @worker_task
     def prune_slice(pdf: pd.DataFrame) -> pd.DataFrame:
         """One salted slice of a hot cell + the replicated comparator
         block: slice rows keep iff no EARLIER comparator is τ-near.

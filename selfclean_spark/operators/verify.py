@@ -28,7 +28,14 @@ Physical design (the 100-TB shape): the raw ``content`` column is
 4. **Suffix-array substring rescue** — ONLY pairs that failed the
    Jaccard threshold but show shingle containment ≥ 0.9 join content
    (a small fraction of candidates); the per-partition suffix-array
-   kernel confirms verbatim containment.
+   kernel confirms verbatim containment and passes the pair's scored
+   columns through.  The verified edges are then one union of two
+   filters over the scored pairs (above threshold; confirmed rescue):
+   the scored pairs are neither persisted nor joined back to the
+   rescue output.  Nothing in the verify plan is persisted, so AQE
+   reuses every exchange the two branches share (enrich joins,
+   shingle table, scoring joins): the rescue branch adds only its two
+   content joins.
 
 At 10⁹ candidate edges with 10 KB docs this shuffles hashed-shingle
 arrays for the candidate docs instead of k content copies per doc —
@@ -59,12 +66,11 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from pyspark.storagelevel import StorageLevel
 
-from selfclean_spark import caching
 from selfclean_spark.config import PipelineConfig, SignatureConfig
 from selfclean_spark.functions import sketches
 from selfclean_spark.functions.suffix import sa_contains, suffix_array
+from selfclean_spark.functions.worker import worker_task
 
 VERIFIED_SCHEMA = StructType(
     [
@@ -87,15 +93,6 @@ _SHINGLE_SCHEMA = StructType(
         StructField("shingles", ArrayType(LongType(), False), False),
     ]
 )
-
-_RESCUE_SCHEMA = StructType(
-    [
-        StructField("id_a", LongType(), False),
-        StructField("id_b", LongType(), False),
-        StructField("substring", BooleanType(), False),
-    ]
-)
-
 
 def enrich_candidates(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
     """Attach per-side sketches + shas and compute the native tiers
@@ -152,6 +149,7 @@ def shingle_table(
     # to ~chunk × avg_shingles × 8 B regardless of input batch size.
     chunk = 256
 
+    @worker_task
     def shingle_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for s in range(0, len(pdf), chunk):
@@ -168,14 +166,17 @@ def shingle_table(
 
 
 def _substring_rescue(
-    rescue_pairs: DataFrame, ingested: DataFrame
+    rescue_pairs: DataFrame,
+    ingested: DataFrame,
+    carry: tuple[str, ...] = ("id_a", "id_b"),
 ) -> DataFrame:
     """Suffix-array verbatim-containment confirm for the (small) set of
     below-threshold pairs with high shingle containment.  The ONLY
-    place raw content enters the verification plan."""
+    place raw content enters the verification plan.  Returns the
+    ``carry`` columns of ``rescue_pairs`` plus ``substring``."""
     content = ingested.select("id", "content")
     with_content = (
-        rescue_pairs.select("id_a", "id_b")
+        rescue_pairs.select(*carry)
         .join(
             content.select(
                 F.col("id").alias("id_a"), F.col("content").alias("content_a")
@@ -190,6 +191,7 @@ def _substring_rescue(
         )
     )
 
+    @worker_task
     def confirm_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
@@ -208,15 +210,13 @@ def _substring_rescue(
                 sub[i] = sa_contains(
                     hay, sarr, inner.encode("utf-8", "surrogatepass")
                 )
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy(),
-                    "id_b": pdf["id_b"].to_numpy(),
-                    "substring": sub,
-                }
-            )
+            yield pdf[list(carry)].assign(substring=sub)
 
-    return with_content.mapInPandas(confirm_batches, schema=_RESCUE_SCHEMA)
+    schema = StructType(
+        [rescue_pairs.schema[c] for c in carry]
+        + [StructField("substring", BooleanType(), False)]
+    )
+    return with_content.mapInPandas(confirm_batches, schema=schema)
 
 
 def substring_confirm(pairs: DataFrame, docs: DataFrame) -> DataFrame:
@@ -311,34 +311,35 @@ def verify_candidates(
     # Jaccard exactly 1 — no shingling needed.  Real corpora are
     # 30%+ verbatim duplicates, so this skips the Python shingle pass
     # for every doc whose pairs are all exact copies.
-    same_sha = survivors.filter(F.col("sha_a") == F.col("sha_b")).select(
-        "*",
-        F.lit(1.0).alias("jaccard"),
-        F.lit(1.0).alias("containment"),
-    )
-    diff_sha = survivors.filter(F.col("sha_a") != F.col("sha_b"))
+    same_sha = F.col("sha_a") == F.col("sha_b")
 
     # shingle arrays: shingle once per candidate doc appearing in a
-    # sha-differing pair; persisted because the pair plan joins it
-    # on both sides
-    shingles = caching.register_persist(
-        shingle_table(diff_sha, ingested, sig_cfg).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    # sha-differing pair.  Not persisted: every reference to it (both
+    # join sides, in both branches of the rescue union) plans the same
+    # exchange, which AQE reuses, so the kernel runs once.  Spark 4.1
+    # reuses no exchange above an InMemoryRelation, so a persisted
+    # table would be broadcast (or shuffled) once per reference
+    shingles = shingle_table(survivors.filter(~same_sha), ingested, sig_cfg)
     sh_a = shingles.select(
         F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")
     )
     sh_b = shingles.select(
         F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")
     )
+    # left joins: a sha-equal pair's docs need not be shingled, so both
+    # kinds of pair share one plan
     scored = (
-        diff_sha.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jaccard", inter / (na + nb - inter))
-        .withColumn("containment", inter / F.least(na, nb))
+        survivors.join(sh_a, "id_a", "left")
+        .join(sh_b, "id_b", "left")
+        .withColumn(
+            "jaccard",
+            F.when(same_sha, F.lit(1.0)).otherwise(inter / (na + nb - inter)),
+        )
+        .withColumn(
+            "containment",
+            F.when(same_sha, F.lit(1.0)).otherwise(inter / F.least(na, nb)),
+        )
         .drop("sh_a", "sh_b")
-        .unionByName(same_sha)
     )
     return _finish_verify(scored, ingested, cfg, tau)
 
@@ -347,36 +348,27 @@ def _finish_verify(
     scored: DataFrame, ingested: DataFrame, cfg: PipelineConfig, tau: float
 ) -> DataFrame:
 
-    base_cols = [
+    base_cols = (
         "id_a", "id_b", "sha_a", "sha_b", "n_bands_hit",
         "jaccard_est", "hamming", "jaccard",
-    ]
-    if not cfg.check_substring:
-        edges = (
-            scored.filter(F.col("jaccard") >= F.lit(tau))
-            .withColumn("substring", F.col("sha_a") == F.col("sha_b"))
-        )
-    else:
-        # two consumers (threshold branch + rescue branch) share the plan
-        scored = caching.register_persist(
-            scored.persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        above = scored.filter(F.col("jaccard") >= F.lit(tau)).withColumn(
-            "substring", F.col("sha_a") == F.col("sha_b")
-        )
+    )
+    edges = (
+        scored.filter(F.col("jaccard") >= F.lit(tau))
+        .select(*base_cols, (F.col("sha_a") == F.col("sha_b")).alias("substring"))
+    )
+    if cfg.check_substring:
         # rescue: a true substring pair has essentially all inner
-        # shingles inside the outer doc
+        # shingles inside the outer doc.  The rescue carries every
+        # column the union needs, so the plan is one union of two
+        # filters over ``scored``.  Content enters only under the rescue
+        # branch, for the rescue pairs.
         rescue_in = scored.filter(
             (F.col("jaccard") < F.lit(tau)) & (F.col("containment") >= 0.9)
         )
-        confirmed = (
-            rescue_in.join(
-                _substring_rescue(rescue_in, ingested).filter(F.col("substring")),
-                ["id_a", "id_b"],
+        edges = edges.unionByName(
+            _substring_rescue(rescue_in, ingested, carry=base_cols).filter(
+                F.col("substring")
             )
-        )
-        edges = above.select(*base_cols, "substring").unionByName(
-            confirmed.select(*base_cols, "substring")
         )
     return edges.select(
         "id_a",

@@ -20,12 +20,24 @@ Per-stage metrics (north rule) cost no Spark job of their own: rows
 out come from an Observation riding the checkpoint write; skew ratio
 (max/avg records written per task, worst stage) and shuffle-write
 bytes come from the app status store's task metrics of the write's
-jobs, found by job-id range.  The run's input row count is the same
-aggregation as the source sha fingerprint.
+jobs, found by job-id range.
+
+The sha256 invariant costs no job on a fresh run either.  The source
+fingerprint (row count + xor of xxhash64(id, content_sha)) is an
+Observation on the signature kernel's input, and the signatures write
+observes the same fingerprint on the kernel's output; ``_run_stage``
+compares the two after the write and raises on a mismatch.  The count
+is the run's input row count.  The verified signature table then
+stands for the source's (id, sha) dimension in the verified-edge check.
+On a signatures-checkpoint hit the kernel does not run, so the source
+fingerprint is one aggregation over a persisted (id, sha) projection,
+and the edge check joins against that projection.
 
 Rankings (stage 6) join their metadata before the global rank, so each
-ranking is one checkpointed leaf that both its ``fraction_cut``
-aggregation and the final read scan (see ``functions.rank``).
+ranking is one checkpointed leaf that the final read scans (see
+``functions.rank``).  With auto-cleaning on the exact-quantile path,
+the ``fraction_cut`` fit's one aggregation rides that leaf's checkpoint
+as an Observation, so the fit runs no job of its own.
 """
 
 from __future__ import annotations
@@ -49,6 +61,7 @@ from selfclean_spark.operators import signatures as sig_ops
 from selfclean_spark.operators import verify as verify_ops
 from selfclean_spark.operators.autoclean import (
     EXACT_QUANTILE_MAX_ROWS,
+    fit_observation,
     fraction_cut,
 )
 from selfclean_spark.results import IssueManager, IssueTypes
@@ -136,7 +149,9 @@ class DedupPipeline:
         """(row count, xor of xxhash64(id, content_sha)) over the source
         identity dimension — ONE aggregation that is both the run's
         input row count and the reference every full-universe stage
-        fingerprint is compared against (multiset equality w.h.p.)."""
+        fingerprint is compared against (multiset equality w.h.p.).
+        Runs only on a signatures-checkpoint hit; a fresh run observes
+        the same fingerprint on the signature kernel's input."""
         row = self._id_sha.agg(*_fingerprint()).collect()[0]
         return int(row["n"]), int(row["fp"])
 
@@ -146,7 +161,12 @@ class DedupPipeline:
         build,  # () -> (DataFrame, dict extra)
         rows_in: int,
         force: bool = False,
+        source: Observation | None = None,
     ) -> DataFrame:
+        """Build and checkpoint stage ``name`` unless a checkpoint under
+        this config exists.  ``source``: the source fingerprint, observed
+        on the stage's input by ``build``; after the write it becomes
+        ``self._src_fp`` and the stage's ``rows_in``."""
         cfg_hash = self.config.config_hash()
         if not force and self.catalog.exists(name, cfg_hash):
             log.info("stage %s: checkpoint hit, skipping", name)
@@ -179,6 +199,10 @@ class DedupPipeline:
             ),
         )
         t_write = now()
+        if source is not None:
+            got_src = source.get
+            self._src_fp = (int(got_src["n"]), int(got_src["fp"]))
+            rows_in = self._src_fp[0]
         # the write's jobs are found by id range, not by job group (a
         # caller's job group must stay untouched)
         skew, shuffle_bytes = _job_stats(self.spark.sparkContext, first_job)
@@ -206,6 +230,7 @@ class DedupPipeline:
         manifest = self.catalog._load_manifest()
         manifest["stages"][name]["rows_out"] = got["n"]
         manifest["metrics"][-1].update(
+            rows_in=rows_in,
             rows_out=got["n"],
             skew_ratio=skew,
             shuffle_bytes=shuffle_bytes,
@@ -235,24 +260,40 @@ class DedupPipeline:
 
         # stage 0: ingest (virtual — deterministic projection, see STAGES)
         ingested = ingest_ops.with_identity(code_files)
-        # the (id, sha) dimension backs every invariant check; pin the
-        # narrow projection so each check doesn't re-hash the source
-        self._id_sha = caching.register_persist(
-            ingested.select("id", "content_sha").persist(StorageLevel.DISK_ONLY)
-        )
-        # computed afresh every run: a second run() on another corpus
-        # must not compare against the first corpus's fingerprint
-        self._src_fp = self._source_sha_fingerprint()
-        n_input = self._src_fp[0]
         metadata = ingest_ops.metadata_of(ingested)
 
         # stage 1: signatures ---------------------------------------------
+        # the source fingerprint is computed afresh every run (a second
+        # run() on another corpus must not compare against the first
+        # corpus's): on a fresh signatures stage it is observed on the
+        # kernel's input and resolved by _run_stage after the write
+        self._src_fp = None
+        source = Observation("source_fingerprint")
         signatures = self._run_stage(
             "signatures",
-            lambda: (sig_ops.compute_signatures(ingested, cfg.signature), {}),
-            rows_in=n_input,
+            lambda: (
+                sig_ops.compute_signatures(
+                    ingested.observe(source, *_fingerprint()), cfg.signature
+                ),
+                {},
+            ),
+            rows_in=-1,  # patched from ``source`` after the write
             force=force,
+            source=source,
         )
+        if self._src_fp is None:
+            # checkpoint hit: the kernel did not run.  Pin the narrow
+            # (id, sha) projection so the fingerprint and the edge check
+            # hash the source once
+            self._id_sha = caching.register_persist(
+                ingested.select("id", "content_sha").persist(StorageLevel.DISK_ONLY)
+            )
+            self._src_fp = self._source_sha_fingerprint()
+        else:
+            # the signature table's (id, sha) multiset was just checked
+            # equal to the source's: it is the reference from here on
+            self._id_sha = signatures.select("id", "content_sha")
+        n_input = self._src_fp[0]
 
         # stage 2+3: bands → candidates ------------------------------------
         def build_candidates():
@@ -353,7 +394,8 @@ class DedupPipeline:
         # stage 5: connected components -------------------------------------
         def build_components():
             comps, rounds = comp_ops.connected_components(
-                verified, cfg.cc_max_iterations
+                verified, cfg.cc_max_iterations,
+                n_rows=self.catalog.rows_out("verified_edges"),
             )
             full = comp_ops.with_singletons(comps, ingested)
             return full, {"cc_rounds": rounds}
@@ -386,14 +428,18 @@ class DedupPipeline:
         # ranking nobody reads would add driver actions to every run —
         # the reference likewise computes each issue at predict() time
         # (selfclean_cleaner.py:182-213).  fraction_cut fits land in
-        # manager.meta["fits"] when the ranking is first accessed.
-        def _cut(ranked, col, pair, key):
+        # manager.meta["fits"] when the ranking is first accessed; on
+        # the exact path the fit rides the rank leaf's checkpoint.
+        def _ranking(key, build, col, pair):
+            """``build(observe)`` → ranking, auto-cut if configured."""
             if not cfg.auto_cleaning:
-                return ranked
+                return build(None)
+            exact = pair_exact if pair else doc_exact
+            observe = fit_observation(col, cfg.cleaner_alpha, pair) if exact else None
             ranked, fit = fraction_cut(
-                ranked, col, n_samples=n_input,
+                build(observe), col, n_samples=n_input,
                 alpha=cfg.cleaner_alpha, q=cfg.cleaner_q, pair_scores=pair,
-                exact_quantiles=pair_exact if pair else doc_exact,
+                exact_quantiles=exact, fitted=observe[0] if observe else None,
             )
             manager.meta.setdefault("fits", {})[key] = fit
             return ranked
@@ -401,18 +447,22 @@ class DedupPipeline:
         if "near_duplicates" in wanted:
             manager.register(
                 IssueTypes.NEAR_DUPLICATES,
-                lambda: _cut(
-                    rank_ops.near_duplicate_ranking(verified, metadata),
-                    "dist", True, "near_duplicates",
+                lambda: _ranking(
+                    "near_duplicates",
+                    lambda o: rank_ops.near_duplicate_ranking(verified, metadata, o),
+                    "dist", True,
                 ),
             )
             manager.register("knn_edges", lambda: rank_ops.knn_edges(verified))
         if "off_topic_samples" in wanted:
             manager.register(
                 IssueTypes.OFF_TOPIC_SAMPLES,
-                lambda: _cut(
-                    rank_ops.isolation_ranking(signatures, metadata),
-                    "score", False, "off_topic_samples",
+                lambda: _ranking(
+                    "off_topic_samples",
+                    lambda o: rank_ops.isolation_ranking(
+                        signatures, metadata, observe=o
+                    ),
+                    "score", False,
                 ),
             )
             manager.register(
@@ -422,9 +472,10 @@ class DedupPipeline:
         if "label_errors" in wanted:
             manager.register(
                 IssueTypes.LABEL_ERRORS,
-                lambda: _cut(
-                    rank_ops.lang_mismatch_ranking(verified, metadata),
-                    "score", False, "label_errors",
+                lambda: _ranking(
+                    "label_errors",
+                    lambda o: rank_ops.lang_mismatch_ranking(verified, metadata, o),
+                    "score", False,
                 ),
             )
         manager.register(IssueTypes.COMPONENTS, components)
@@ -436,7 +487,9 @@ class DedupPipeline:
     def _assert_edge_shas(self, verified: DataFrame, ingested: DataFrame) -> None:
         """sha invariant for the pair table — both endpoints checked in
         ONE join job (the two per-side joins were fused; at scale this
-        is a single sort-merge on the id key over the unioned sides)."""
+        is a single sort-merge on the id key over the unioned sides)
+        against ``self._id_sha``, the source's (id, sha) dimension or
+        the signature table checked equal to it."""
         sides = verified.select(
             F.col("id_a").alias("id"), F.col("sha_a").alias("content_sha")
         ).union(

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from selfclean_spark.functions.worker import worker_task
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("id", LongType(), False),
@@ -91,6 +93,7 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     the Arrow batching, schema, and partition behavior are identical.
     """
 
+    @worker_task
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             feats = [fake_decode_features(d, dim) for d in pdf["data"]]
@@ -166,6 +169,7 @@ def byte_feature_stats(media: DataFrame, dim: int = 16) -> DataFrame:
     the Arrow plumbing itself hash-oracled."""
     stride = dim
 
+    @worker_task
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             feats = []

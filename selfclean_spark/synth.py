@@ -27,6 +27,8 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from selfclean_spark.functions.worker import worker_task
+
 LANGS = ["python", "java", "go", "js", "c"]
 _EXT = {"python": "py", "java": "java", "go": "go", "js": "js", "c": "c"}
 
@@ -212,6 +214,7 @@ def synth_code_files_spark(
     n_planted = int(n_rows * dup_fraction)
     group_size = 3
 
+    @worker_task
     def gen(batches):
         import numpy as np  # noqa: PLC0415 — executor-side import
         import pandas as pd  # noqa: PLC0415

@@ -18,14 +18,20 @@ from selfclean_spark.synth import generate_code_files
 RANKINGS = ("near_duplicates", "off_topic_samples", "label_errors")
 
 # measured on this module's corpus and the suite's session settings
-# (local[4], 8 shuffle partitions): 43 jobs for run() and 30 for the
+# (local[4], 8 shuffle partitions): 27 jobs for run() and 26 for the
 # three rankings; the slack absorbs AQE re-planning noise, not an
 # extra job per stage or a second execution of a ranking
-RUN_JOBS, RANKING_JOBS, SLACK = 43, 30, 3
+RUN_JOBS, RANKING_JOBS, SLACK = 27, 26, 3
 
 
 def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _persistent_rdds(spark) -> set[int]:
+    """Ids of the RDDs the context holds persisted (caches and
+    ``localCheckpoint`` blocks alike)."""
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
 
 @pytest.fixture(scope="module")
@@ -36,6 +42,7 @@ def counted(spark, tmp_path_factory):
     code_files = spark.createDataFrame(pdf)
     catalog = ParquetCatalog(spark, str(tmp_path_factory.mktemp("budget")))
     pipe = DedupPipeline(spark, catalog, PipelineConfig(auto_cleaning=True))
+    rdds_before = _persistent_rdds(spark)
     j0 = _jobs_started(spark.sparkContext)
     manager = pipe.run(code_files)
     j1 = _jobs_started(spark.sparkContext)
@@ -44,7 +51,7 @@ def counted(spark, tmp_path_factory):
     j2 = _jobs_started(spark.sparkContext)
     return {
         "pipe": pipe, "catalog": catalog, "manager": manager, "n": len(pdf),
-        "run_jobs": j1 - j0, "ranking_jobs": j2 - j1,
+        "run_jobs": j1 - j0, "ranking_jobs": j2 - j1, "rdds_before": rdds_before,
     }
 
 
@@ -104,13 +111,19 @@ def test_manifest_metrics_from_task_metrics(counted):
 
 
 def test_clear_releases_every_run_persist(spark, counted):
-    """The (id, sha) dimension and verify's shingle/scored tables are
-    registered, so ``caching.clear`` leaves nothing cached."""
+    """Verify's shingle table is registered, so ``caching.clear`` leaves
+    nothing cached."""
     cache = spark._jsparkSession.sharedState().cacheManager()
-    assert counted["pipe"]._id_sha.storageLevel.useDisk
     caching.clear(blocking=True)
     assert cache.isEmpty()
-    assert not counted["pipe"]._id_sha.storageLevel.useDisk
+
+
+def test_clear_frees_every_run_checkpoint(spark, counted):
+    """The final CC round and the three rank leaves are registered, so
+    after ``caching.clear`` the context holds no RDD the run and its
+    rankings persisted or checkpointed."""
+    caching.clear(blocking=True)
+    assert _persistent_rdds(spark) - counted["rdds_before"] == set()
 
 
 def test_second_run_on_another_corpus(spark, tmp_path):
