@@ -122,54 +122,8 @@ class ParquetCatalog:
         self._record(name, path, metrics, schema=df.schema.json())
         return self.read(name)
 
-    def write_bucketed(
-        self,
-        name: str,
-        df: DataFrame,
-        metrics: StageMetrics,
-        buckets: int,
-        key: str,
-        sort_by: str | None = None,
-    ) -> DataFrame:
-        """Bucketed + sorted stage write: the data-layout move for hot
-        join/aggregation keys.  Two stages bucketed the same way
-        (same ``buckets``, same ``key``) join and group WITHOUT any
-        Exchange — at 100 TB that deletes the dominant shuffle of every
-        downstream co-keyed join, paid once at write time.  Bucketing
-        requires a catalog table (Spark persists bucket metadata in the
-        table definition, not the files), so this registers an external
-        table at the stage path; ``read`` resolves it back through the
-        session catalog to keep the bucket spec visible to the planner.
-        """
-        path = os.path.abspath(self.path_of(name))
-        ident = "scs_" + "".join(
-            c if c.isalnum() else "_" for c in path
-        ).strip("_")
-        self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        if os.path.exists(path):
-            import shutil
-
-            shutil.rmtree(path)
-        (
-            df.write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(buckets, key)
-            .sortBy(sort_by or key)
-            .format("parquet")
-            .saveAsTable(ident)
-        )
-        self._record(
-            name, path, metrics, table_ident=ident, buckets=buckets, bucket_key=key
-        )
-        return self.read(name)
-
     def read(self, name: str) -> DataFrame:
         entry = self._load_manifest()["stages"].get(name) or {}
-        ident = entry.get("table_ident")
-        if ident and self.spark.catalog.tableExists(ident):
-            # catalog table carries the bucket spec; a path read would
-            # silently drop it and downstream joins would re-shuffle
-            return self.spark.table(ident)
         reader = self.spark.read
         if "schema" in entry:
             reader = reader.schema(StructType.fromJson(json.loads(entry["schema"])))

@@ -10,6 +10,11 @@ hashes identically — probability 1-(1-s^r)^b of meeting at Jaccard s
 (≈0.99995 at s=0.8 with the default r=5/b=25), which buys the ≥0.99
 recall gate sub-quadratically.
 
+:func:`edge_plan` is the one candidate recipe: the pipeline, the
+MinHash query surface (``dedup.minhash_lsh_pairs``) and the incremental
+path (``streaming.incremental.dedup_batch``, new×all) all build their
+candidate pairs with it, so each gives the same pairs on the same rows.
+
 :func:`capped_self_join` is the one plan for every capped inverted
 index — LSH bands, n-gram / token / winnowing / block postings, SimHash
 blocks, file digests: a count window and the cap filter over one key
@@ -23,8 +28,8 @@ so the single long IS the bucket key.  Buckets larger than
 ``band_bucket_cap`` never expand (m² pairs from boilerplate/empty-file
 buckets); they are counted in the ``observation`` instead — never
 silent (SURVEY.md §4.2).  Rows in a dropped bucket still meet through
-their b-1 other bands, and verbatim duplicates are additionally
-guaranteed by the sha-equality fast path below.
+their b-1 other bands, and verbatim duplicates are guaranteed by the
+sha-equality exact pairs :func:`edge_plan` adds.
 
 Skew: the shuffle key is band_hash — uniform by construction (xxhash64
 of minhash values); the cap bounds any residual value skew, AQE
@@ -35,8 +40,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from selfclean_spark.config import PipelineConfig
 
 _PAIR_EXPANSION = (
     "flatten(transform(ids, (x, i) -> "
@@ -163,98 +170,85 @@ def band_pair_stream(
     bands: DataFrame,
     band_bucket_cap: int,
     observation: Observation | None = None,
+    carry: Sequence[str] = (),
 ) -> DataFrame:
-    """(id, band_hash) → raw (id_a, id_b) co-bucket stream, one row per
-    shared band: :func:`capped_self_join` on ``band_hash``.  Callers
-    that fuse other edge sources into the same pair-level groupBy (the
-    pipeline unions sha-equality exact edges) consume this stream
-    instead of :func:`candidate_pairs`, so the pair set shuffles once."""
+    """(id, band_hash, carry...) → raw (id_a, id_b, <c>_a, <c>_b...)
+    co-bucket stream, one row per shared band: :func:`capped_self_join`
+    on ``band_hash``.  It stays a module-level function (and
+    :func:`edge_plan` calls it through the module globals) because the
+    benchmark's tracer wraps it by name to time the band self-join."""
     return capped_self_join(
-        bands, "band_hash", band_bucket_cap, observation=observation
-    ).select("id_a", "id_b")
+        bands, "band_hash", band_bucket_cap, carry=carry, observation=observation
+    ).select("id_a", "id_b", *[f"{c}_{s}" for c in carry for s in "ab"])
 
 
-def candidate_pairs(
+def _touched(df: DataFrame, key: str) -> DataFrame:
+    """Rows of ``df`` whose ``key`` value some ``_new`` row carries."""
+    return df.join(df.filter("_new").select(key).distinct(), key, "leftsemi")
+
+
+def edge_plan(
     bands: DataFrame,
-    band_bucket_cap: int,
+    id_sha: DataFrame,
+    cfg: PipelineConfig,
+    new: Column | None = None,
     observation: Observation | None = None,
 ) -> DataFrame:
-    """(id, band_hash) → candidate pairs (id_a, id_b, n_bands_hit) with
-    id_a < id_b, distinct: per-pair band-hit counts over
-    :func:`band_pair_stream`.  Pass ``observation`` for the
-    dropped-bucket accounting."""
-    return (
-        band_pair_stream(bands, band_bucket_cap, observation)
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_bands_hit"))
-    )
+    """THE candidate recipe: (id, band_hash) bands + (id, content_sha)
+    rows → candidate pairs (id_a < id_b, n_bands_hit), shared by the
+    pipeline, the query surface and the incremental path.
 
+    The raw band co-bucket stream (:func:`band_pair_stream`) and the
+    sha-equality exact pairs (:func:`exact_duplicate_pairs`, so a
+    verbatim family above ``band_bucket_cap`` never loses its pairs to
+    the cap) flow into ONE pair-level aggregation, so the pair set
+    shuffles once.  ``n_bands_hit`` is the band-hit count of an LSH
+    pair and ``lsh_bands`` for a sha-equal pair (which trivially hits
+    every band); ``min_bands_hit`` never drops an exact pair.  Pass
+    ``id_sha`` from a signature table: content is never re-read.
 
-def incremental_candidate_pairs(
-    new_bands: DataFrame,
-    all_bands: DataFrame,
-    band_bucket_cap: int,
-    touched_keys: list[int] | None = None,
-) -> DataFrame:
-    """New×all LSH candidate join — the incremental-index complement
-    of :func:`candidate_pairs`: candidates always carry ≥1 endpoint
-    from ``new_bands`` (new×old and new×new; old×old pairs are the
-    base index's own business).
+    ``new``: a boolean column over both inputs marking the rows of the
+    incremental batch — the new×all asymmetric join of *Distributed
+    Stream KNN Join* (SIGMOD 2021).  Both inputs are first pruned to
+    the band buckets and sha groups some new row touches; such a bucket
+    holds every accumulated member, so bucket sizes and the cap still
+    see the accumulated state while untouched buckets are never
+    shuffled.  Only pairs with at least one new endpoint are kept
+    (old×old pairs were emitted by their own batch).
 
-    ``all_bands`` must be the ACCUMULATED index (base ∪ new): bucket
-    sizes — and the hot-bucket cap — are evaluated on the accumulated
-    state, the same dropped-bucket semantics the streaming path
-    documents (``streaming.incremental.dedup_batch``, which delegates
-    here).  ``countDistinct`` not ``count``: a new×new pair appears in
-    BOTH orientations of the asymmetric join, a new×old pair in one —
-    the distinct band-key count is orientation-proof either way.
-
-    100-TB shape: a bucket with no NEW member can never emit a
-    ≥1-new-endpoint candidate, so the accumulated index is pruned to
-    the new batch's band keys FIRST (a semi-join AQE broadcasts when
-    the batch is micro) — the full index is never shuffled on behalf
-    of a small batch; bucket sizes (and the hot-bucket cap, which must
-    see ACCUMULATED size) are then computed over the pruned slice
-    only, which contains every member of every touched bucket and is
-    therefore exactly the accumulated size for those buckets.
-
-    ``touched_keys``: callers whose new side is a BOUNDED micro-batch
-    (e.g. the 15 planted wrapper docs of
-    ``queries.substring_containment_pairs``) may pre-collect the new
-    band keys and pass them here — the prune then becomes a map-side
-    literal ``isin`` filter (the dynamic-partition-pruning shape, two
-    fewer stage boundaries than the semi-join).  Unbounded callers
-    (streaming batches) pass None and get the semi-join.
-    """
-    keys = ["band_hash"]
-    if touched_keys is not None:
-        all_touched = all_bands.filter(F.col("band_hash").isin(touched_keys))
-    else:
-        touched = new_bands.select(*keys).distinct()
-        # no broadcast hint: micro-batches broadcast via AQE runtime
-        # stats; a large streaming batch falls back to a shuffled
-        # semi-join
-        all_touched = all_bands.join(touched, keys, "leftsemi")
-    sizes = all_touched.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    eligible = sizes.filter(
-        (F.col("n") >= 2) & (F.col("n") <= band_bucket_cap)
-    ).select(*keys)
-    new_side = new_bands.join(eligible, keys).select(
-        *keys, F.col("id").alias("id_new")
-    )
-    all_side = all_touched.join(eligible, keys).select(
-        *keys, F.col("id").alias("id_other")
-    )
-    return (
-        new_side.join(all_side, keys)
-        .filter(F.col("id_new") != F.col("id_other"))
-        .select(
-            "band_hash",
-            F.least("id_new", "id_other").alias("id_a"),
-            F.greatest("id_new", "id_other").alias("id_b"),
+    ``observation``: the band cap's dropped-bucket accounting (see
+    :func:`capped_self_join`)."""
+    cap, carry = cfg.band_bucket_cap, ()
+    if new is not None:
+        bands = _touched(bands.withColumn("_new", new), "band_hash")
+        id_sha = _touched(id_sha.withColumn("_new", new), "content_sha")
+        carry = ("_new",)
+    raw = band_pair_stream(bands, cap, observation, carry)
+    exact = exact_duplicate_pairs(id_sha, pair_cap=cap)
+    if new is not None:
+        flag = id_sha.select("id", "_new")
+        exact = exact.join(flag.toDF("id_a", "_new_a"), "id_a").join(
+            flag.toDF("id_b", "_new_b"), "id_b"
         )
+        has_new = F.col("_new_a") | F.col("_new_b")
+        raw, exact = raw.filter(has_new), exact.filter(has_new)
+    return (
+        raw.select("id_a", "id_b", F.lit(False).alias("is_exact"))
+        .unionByName(exact.select("id_a", "id_b", F.lit(True).alias("is_exact")))
         .groupBy("id_a", "id_b")
-        .agg(F.countDistinct("band_hash").alias("n_bands_hit"))
+        .agg(
+            F.sum(F.when(~F.col("is_exact"), 1).otherwise(0)).alias("bands_hit"),
+            F.max("is_exact").alias("is_exact"),
+        )
+        .filter(F.col("is_exact") | (F.col("bands_hit") >= cfg.min_bands_hit))
+        .select(
+            "id_a",
+            "id_b",
+            F.when(F.col("is_exact"), F.lit(cfg.signature.lsh_bands))
+            .otherwise(F.col("bands_hit"))
+            .cast("long")
+            .alias("n_bands_hit"),
+        )
     )
 
 

@@ -375,7 +375,8 @@ def contracted_triangle_stats(
     # trade (guide §5) is safe here: redges is the SPARSE contracted
     # graph (near-dup structure between distinct texts — the operator's
     # own scale contract), orders of magnitude below the corpus.
-    redges = (
+    # Registered, so ``caching.clear()`` frees its blocks.
+    redges = caching.register_checkpoint(
         cands.join(
             set_arr.select(F.col("id").alias("sa"), F.col("toks").alias("ta"), F.col("n_tok").alias("n_a")),
             "sa",

@@ -174,8 +174,10 @@ def minhash_lsh_pairs(
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Full sketch path on an arbitrary corpus: shingle → MinHash →
-    LSH bands → candidate join → exact verification.  Returns
-    verified_edges (id_a, id_b, jaccard, hamming, substring, dist).
+    LSH bands → candidates (``candidates.edge_plan``, the pipeline's
+    recipe: band pairs plus sha-equal pairs) → exact verification.
+    Returns verified_edges (id_a, id_b, jaccard, hamming, substring,
+    dist).
 
     ``signatures``: optionally pass an already-persisted
     :func:`minhash_signatures` table for ``df`` (same cfg) — callers
@@ -188,7 +190,7 @@ def minhash_lsh_pairs(
     if signatures is None:
         signatures = minhash_signatures(df, id_col, text_col, cfg)
     bands = sig_ops.band_hashes(signatures, cfg.signature)
-    pairs = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
+    pairs = cand_ops.edge_plan(bands, signatures, cfg)
     return verify_ops.verify_candidates(pairs, std, signatures, cfg)
 
 

@@ -297,59 +297,19 @@ class DedupPipeline:
 
         # stage 2+3: bands → candidates ------------------------------------
         def build_candidates():
-            bands = sig_ops.band_hashes(signatures, cfg.signature)
             # dropped-bucket accounting rides the stage write as an
-            # Observation (no second action, no persist of the sizes
-            # table); _run_stage resolves it into the metrics sidecar
-            # after the write — logged, never silent (SURVEY.md §4.2)
+            # Observation; _run_stage resolves it into the metrics
+            # sidecar after the write — logged, never silent (SURVEY.md
+            # §4.2).  The exact pairs read the checkpointed signature
+            # table: no content re-read, no second sha256 pass
             dropped_obs = Observation("dropped_band_buckets")
-            raw = cand_ops.band_pair_stream(
-                bands, cfg.band_bucket_cap, observation=dropped_obs
+            pairs = cand_ops.edge_plan(
+                sig_ops.band_hashes(signatures, cfg.signature),
+                signatures,
+                cfg,
+                observation=dropped_obs,
             )
-            extra = {"band_buckets": dropped_obs}
-            # exact-dup pairs (sha equality) are injected so capped hot
-            # buckets can never lose verbatim duplicates; sourced from
-            # the checkpointed signature table (narrow — no content
-            # re-read, no second sha256 pass over the corpus).  The raw
-            # co-bucket stream and the exact edges flow into ONE
-            # pair-level aggregation (r3: the previous
-            # aggregate→union→aggregate chain shuffled the full pair
-            # set twice; fusing drops a stage + an exchange from the
-            # candidates critical path) — semantics unchanged:
-            # n_bands_hit = band-hit count for LSH pairs, lsh_bands for
-            # sha-equal pairs (which trivially hit every band), and the
-            # min_bands_hit precision filter never drops an exact pair.
-            exact = cand_ops.exact_duplicate_pairs(
-                signatures, pair_cap=cfg.band_bucket_cap
-            )
-            all_pairs = (
-                raw.select("id_a", "id_b", F.lit(False).alias("is_exact"))
-                .unionByName(
-                    exact.select("id_a", "id_b", F.lit(True).alias("is_exact"))
-                )
-                .groupBy("id_a", "id_b")
-                .agg(
-                    F.sum(F.when(~F.col("is_exact"), 1).otherwise(0)).alias(
-                        "bands_hit"
-                    ),
-                    F.max("is_exact").alias("is_exact"),
-                )
-                .filter(
-                    F.col("is_exact")
-                    | (F.col("bands_hit") >= cfg.min_bands_hit)
-                )
-                .select(
-                    "id_a",
-                    "id_b",
-                    F.when(
-                        F.col("is_exact"), F.lit(cfg.signature.lsh_bands)
-                    )
-                    .otherwise(F.col("bands_hit"))
-                    .cast("long")
-                    .alias("n_bands_hit"),
-                )
-            )
-            return all_pairs, extra
+            return pairs, {"band_buckets": dropped_obs}
 
         candidates = self._run_stage(
             "candidates", build_candidates, rows_in=n_input, force=force

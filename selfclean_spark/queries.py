@@ -39,6 +39,13 @@ DOCS_CFG = PipelineConfig(
     ),
     jaccard_threshold=0.5,
     check_substring=False,
+    # one band hit suffices: at s=tau=0.5 with r=4, b=32 a pair meets
+    # in >=1 band with probability 1-(1-0.5^4)^32 = 0.87, but in >=2
+    # bands only 0.87 - 32*0.5^4*(1-0.5^4)^31 = 0.60.  The DuckDB twins
+    # hold the exact-Jaccard truth set: at sf0.1 both settings match it
+    # (its least similar verified pair sits at 0.8, where either gives
+    # ~1.0), so only the arithmetic near tau decides, for 1
+    min_bands_hit=1,
 )
 
 
@@ -1078,12 +1085,12 @@ def substring_containment_pairs(spark, sf_dir):
     Incremental edge derivation (VERDICT r4 #2), ADAPTIVE on session
     cache state: when the session has already built the corpus edge +
     signature caches (``caching.peek``), the corpus side reads the
-    edge cache and the 15 wrapper docs are signed ALONE, then
-    LSH-joined against the accumulated band index via the same kernel
-    the streaming path runs (``candidates.incremental_candidate_pairs``
-    — index pruned to the wrapper-touched buckets, bucket cap on
-    accumulated sizes, ≥1 new endpoint per candidate) and exact-
-    verified: the sketch UDF touches 15 rows, not the corpus.  When
+    edge cache and the 15 wrapper docs are signed ALONE, then joined
+    against the accumulated index by the candidate recipe the streaming
+    path runs (``candidates.edge_plan`` with ``new`` — index pruned to
+    the wrapper-touched buckets, bucket cap on accumulated sizes, ≥1
+    new endpoint per candidate) and exact-verified: the sketch UDF
+    touches 15 rows, not the corpus.  When
     the session is COLD, the one-pass batch pipeline over corpus+15 is
     strictly cheaper than build-cache-then-increment (fewer shuffles,
     one verify job), so the query runs that instead — both paths emit
@@ -1117,38 +1124,31 @@ def substring_containment_pairs(spark, sf_dir):
         std_w = wrapped.select(
             F.col("doc_id").alias("id"), F.col("text").alias("content")
         ).withColumn("content_sha", F.sha2("content", 256))
-        # 15-row sketch micro-batch; persisted (tiny) because the band
-        # index, both verify enrich sides, and the signature union all
-        # read it — one UDF evaluation total
-        sigs_w = caching.register_persist(
+        # 15-row sketch micro-batch, checkpointed (tiny) because the
+        # band index, both verify enrich sides, and the signature union
+        # all read it — one UDF evaluation total.  A checkpoint leaf,
+        # not a persist: AQE reuses exchanges only above a leaf that
+        # canonicalizes equal, so the two self-join sides and the two
+        # prunes each share one shuffle
+        sigs_w = caching.register_checkpoint(
             sig_ops.compute_signatures(
                 std_w, DOCS_CFG.signature, keep_shingles=True
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            ).localCheckpoint(eager=True)
         )
-        bands_w = sig_ops.band_hashes(sigs_w, DOCS_CFG.signature)
-        bands_all = sig_ops.band_hashes(
-            sigs_nat, DOCS_CFG.signature
-        ).unionByName(bands_w)
-        # bounded driver collect (≤ WRAP_N × lsh_bands = 375 keys, one
-        # micro-job over the 15-row cached signature table): lets the
-        # kernel prune the corpus band index with a map-side literal
-        # filter instead of a semi-join — the dynamic-partition-pruning
-        # shape for a micro-batch against a huge index
-        touched_keys = [
-            r.band_hash
-            for r in bands_w.select("band_hash").distinct().collect()
-        ]
-        pairs_w = cand_ops.incremental_candidate_pairs(
-            bands_w,
-            bands_all,
-            DOCS_CFG.band_bucket_cap,
-            touched_keys=touched_keys,
+        sigs_all = sigs_nat.unionByName(sigs_w)
+        # new×all candidates: only the buckets and sha groups a wrapper
+        # doc touches are joined, sized on the accumulated index
+        pairs_w = cand_ops.edge_plan(
+            sig_ops.band_hashes(sigs_all, DOCS_CFG.signature),
+            sigs_all,
+            DOCS_CFG,
+            new=F.col("id") >= WRAP_SHIFT,
         )
         std_all = docs2.select(
             F.col("doc_id").alias("id"), F.col("text").alias("content")
         ).withColumn("content_sha", F.sha2("content", 256))
         edges_w = verify_ops.verify_candidates(
-            pairs_w, std_all, sigs_nat.unionByName(sigs_w), DOCS_CFG
+            pairs_w, std_all, sigs_all, DOCS_CFG
         ).select("id_a", "id_b")
         edges = edges_nat.unionByName(edges_w)
     else:

@@ -105,24 +105,18 @@ def dedup_batch(
     1. sign + band-hash the NEW docs, land them under
        ``signatures/batch=<id>`` and ``bands/batch=<id>`` (overwrite —
        idempotent under foreachBatch replay);
-    2. LSH-join the new bands against the ACCUMULATED band index —
-       candidates always have ≥1 new endpoint (new×all, including
-       new×new; old×old pairs were emitted by their own batches);
-    3. inject sha-equality exact-duplicate pairs (restricted to pairs
-       with ≥1 new-batch endpoint) from the accumulated signature
-       table — mirroring ``DedupPipeline.build_candidates``, so a
-       family of identical docs larger than ``band_bucket_cap`` can
-       never lose verbatim duplicates to the hot-bucket cap;
-    4. exact verification via the shared batch kernel — old-side
+    2. build candidates with ``DedupPipeline``'s own recipe,
+       ``candidates.edge_plan``, in its new×all form over the
+       ACCUMULATED band index and signature table: band pairs plus
+       sha-equal pairs, the ``min_bands_hit`` filter, and only pairs
+       with ≥1 new endpoint (old×old pairs were emitted by their own
+       batches).  Bucket sizes and the hot-bucket cap see the
+       accumulated state, and a family of identical docs larger than
+       ``band_bucket_cap`` never loses its verbatim pairs to the cap;
+    3. exact verification via the shared batch kernel — old-side
        content is re-read from the source directory semi-joined to
        candidate ids (a content-addressable store on a real lake);
-    5. land verified edges under ``edges/batch=<id>``.
-
-    Hot-bucket safety: bucket sizes are counted over the FULL index
-    each batch, so a band bucket that grows past ``band_bucket_cap``
-    across batches stops expanding (same dropped-bucket semantics as
-    the batch path, evaluated on the accumulated state), while the
-    exact-pair injection keeps verbatim duplicates cap-proof.
+    4. land verified edges under ``edges/batch=<id>``.
     """
     ingested_new = with_identity(batch_df)
     sigs_new = compute_signatures(ingested_new, cfg.signature)
@@ -134,36 +128,12 @@ def dedup_batch(
         f"{work_dir}/bands/batch={batch_id}"
     )
 
-    all_bands = spark.read.parquet(f"{work_dir}/bands")
-    # shared incremental kernel (also drives the batch-query reuse path
-    # in queries.substring_containment_pairs): bucket sizes + cap on
-    # the accumulated index, candidates always have ≥1 new endpoint
-    pairs = cand_ops.incremental_candidate_pairs(
-        spark.read.parquet(f"{work_dir}/bands/batch={batch_id}"),
-        all_bands,
-        cfg.band_bucket_cap,
-    )
-    all_sigs = spark.read.parquet(f"{work_dir}/signatures").drop("batch")
-    # sha-equality exact-dup injection (≥1 new endpoint): identical docs
-    # beyond the band cap still pair — same guarantee as the batch path
-    exact = cand_ops.exact_duplicate_pairs(
-        all_sigs, pair_cap=cfg.band_bucket_cap
-    )
-    new_ids = sigs_new.select("id")
-    exact_new = (
-        exact.join(new_ids.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
-        .unionByName(
-            exact.join(
-                new_ids.withColumnRenamed("id", "id_b"), "id_b", "left_semi"
-            )
-        )
-        .distinct()
-        .withColumn("n_bands_hit", F.lit(cfg.signature.lsh_bands).cast("long"))
-    )
-    pairs = (
-        pairs.unionByName(exact_new)
-        .groupBy("id_a", "id_b")
-        .agg(F.max("n_bands_hit").alias("n_bands_hit"))
+    all_sigs = spark.read.parquet(f"{work_dir}/signatures")
+    pairs = cand_ops.edge_plan(
+        spark.read.parquet(f"{work_dir}/bands"),
+        all_sigs,
+        cfg,
+        new=F.col("batch") == batch_id,
     )
     ingested_all = with_identity(spark.read.parquet(source_dir))
     edges = verify_ops.verify_candidates(pairs, ingested_all, all_sigs, cfg)
@@ -183,17 +153,20 @@ def incremental_dedup(
     every micro-batch of new files is deduplicated against everything
     seen so far (plus itself).
 
-    Parity with the batch pipeline: under stable caps (no band bucket
-    crossing ``band_bucket_cap`` mid-stream) the union of per-batch
-    edge sets equals the batch edge set on the full corpus
-    (parity-tested).  When a bucket DOES cross the cap mid-stream, the
-    streaming union is a superset: earlier batches already emitted
-    pairs from the then-small bucket that a from-scratch batch run
-    drops entirely — dropped-bucket semantics are evaluated on the
-    accumulated state, never retroactively.  Every extra pair still
-    passed the same exact verification, and verbatim duplicates are
-    cap-proof on both paths via the sha-equality injection.  Same
-    one-kernel/two-triggers discipline as
+    Parity with ``DedupPipeline`` itself: each batch builds candidates
+    with the pipeline's recipe (``candidates.edge_plan``) and verifies
+    them with its kernel, so under stable caps (no band bucket or
+    verbatim family crossing ``band_bucket_cap`` mid-stream) the union
+    of per-batch edge sets equals the pipeline's verified edges on the
+    full corpus (parity-tested, including a verbatim family above the
+    cap whose smallest id arrives first).  When a bucket DOES cross the
+    cap mid-stream, the streaming union is a superset: earlier batches
+    already emitted pairs from the then-small bucket that a
+    from-scratch run drops entirely — dropped-bucket semantics are
+    evaluated on the accumulated state, never retroactively.  Every
+    extra pair still passed the same exact verification, and verbatim
+    duplicates are cap-proof on both paths via the sha-equal pairs.
+    Same one-kernel/two-triggers discipline as
     :func:`incremental_signatures`."""
     cfg = cfg or PipelineConfig()
     if schema is None:

@@ -267,7 +267,8 @@ def test_session_memo_drops_other_sessions(spark):
 def test_clear_frees_checkpoint_blocks(spark):
     """``caching.clear()`` releases every block a memoized query made,
     ``localCheckpoint`` ones included (``unpersist`` does not reach
-    those)."""
+    those), and every checkpoint an operator registered: the contracted
+    edge set of ``dedup_graph_triangles`` is freed too."""
     from selfclean_spark import caching
 
     jsc = spark.sparkContext._jsc
@@ -282,3 +283,9 @@ def test_clear_frees_checkpoint_blocks(spark):
     assert created
     caching.clear(blocking=True)
     assert not persistent_ids() & created
+
+    before = persistent_ids()
+    entry_mod.queries()["dedup_graph_triangles"](spark, SF_DIR).count()
+    assert persistent_ids() - before
+    caching.clear(blocking=True)
+    assert not persistent_ids() - before

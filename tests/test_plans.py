@@ -39,7 +39,7 @@ def test_candidates_plan_never_reads_content(tables):
     _cf, sigs = tables
     cfg = PipelineConfig()
     bands = sig_ops.band_hashes(sigs, cfg.signature)
-    pairs = cand_ops.candidate_pairs(bands, cfg.band_bucket_cap)
+    pairs = cand_ops.band_pair_stream(bands, cfg.band_bucket_cap)
     plan = _plan(pairs)
     read_schemas = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schemas, "expected parquet scans in plan"
@@ -61,6 +61,13 @@ def test_candidates_plan_never_reads_content(tables):
     # expansion is the codegen'd shuffled-hash self-join, never a
     # broadcast of the multi-hundred-MB band table
     assert "BroadcastHashJoin" not in plan
+    # the whole candidate recipe adds the sha-equal pairs, which read
+    # only the signature table's digests
+    edge_plan = _plan(cand_ops.edge_plan(bands, sigs, cfg))
+    for line in edge_plan.splitlines():
+        if "ReadSchema" in line:
+            assert "content:" not in line, line
+    assert "CartesianProduct" not in edge_plan
 
 
 def test_block_clone_self_join_is_shuffled_hash(spark):
@@ -121,7 +128,7 @@ def test_verify_plan_content_only_in_shingle_and_rescue(tables):
     cf, sigs = tables
     ing = with_identity(cf)
     bands = sig_ops.band_hashes(sigs, PipelineConfig().signature)
-    pairs = cand_ops.candidate_pairs(bands, 200)
+    pairs = cand_ops.edge_plan(bands, sigs, PipelineConfig())
 
     # no substring confirm: exactly ONE content-reading scan (the
     # shingle semi-join) and no per-pair content columns anywhere

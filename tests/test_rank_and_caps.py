@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from selfclean_spark.functions.rank import with_global_rank
 from selfclean_spark.operators.candidates import (
-    candidate_pairs,
+    band_pair_stream,
     capped_postings,
     capped_self_join,
     exact_duplicate_pairs,
@@ -53,7 +53,7 @@ def test_candidate_hot_bucket_dropped_and_logged(spark):
     rows = [(i, 7777) for i in range(30)] + [(100, 42), (101, 42)]
     bands = spark.createDataFrame(rows, "id long, band_hash long")
     obs = Observation("caps")
-    pairs = candidate_pairs(bands, band_bucket_cap=10, observation=obs)
+    pairs = band_pair_stream(bands, band_bucket_cap=10, observation=obs)
     assert pairs.count() == 1  # only the small bucket pairs up
     assert obs.get == {"dropped_band_buckets": 1, "max_bucket_size": 30}
 

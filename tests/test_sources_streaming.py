@@ -97,63 +97,120 @@ def test_incremental_signatures_match_batch(spark, tmp_path):
     assert replayed.select("id", "minhash", "simhash").orderBy("id").collect() == b
 
 
+def _family_corpus(spark):
+    """A verbatim family of 16 copies (above ``band_bucket_cap`` = 10, so
+    every band bucket of the family is capped) beside a small planted
+    corpus, split into two drops that both hold more than the cap of
+    the family: drop 1 carries the family's smallest id, so both batch
+    and stream star the family on that id."""
+    import pandas as pd
+
+    base = generate_code_files(n_rows=30, seed=5).code_files
+    rng = np.random.default_rng(11)
+    text = " ".join(f"w{int(x)}" for x in rng.integers(0, 5000, size=600))
+    family = pd.DataFrame(
+        {
+            "repo": "org9/vendored",
+            "path": [f"third_party/copy_{i}.py" for i in range(16)],
+            "commit": "0123456789ab",
+            "lang": "python",
+            "content": text,
+        }
+    )
+    ids = with_identity(spark.createDataFrame(family)).select("path", "id").toPandas()
+    order = family.merge(ids, on="path").sort_values("id").drop(columns="id")
+    pdf = pd.concat([base.iloc[:15], order.iloc[:11], base.iloc[15:], order.iloc[11:]])
+    return pdf.reset_index(drop=True), 15 + 11, set(ids["id"])
+
+
 def test_incremental_dedup_matches_batch(spark, tmp_path):
     """Streaming near-dup detection drains two file drops; the union of
-    per-batch edges must equal the batch pipeline's edge set on the
-    full corpus — including the CROSS-batch planted duplicates."""
+    per-batch edges must equal the verified edges of ``DedupPipeline``
+    and of ``dedup.minhash_lsh_pairs`` on the full corpus — including
+    the CROSS-batch planted duplicates."""
     from selfclean_spark.config import PipelineConfig
 
-    cfg = PipelineConfig(check_substring=False)
-    tables = generate_code_files(n_rows=60, seed=23)
-    pdf = tables.code_files
+    pdf = generate_code_files(n_rows=60, seed=23).code_files
+    # split INSIDE a planted dup family (rows 12-14 in this corpus) so
+    # batch 2 must find cross-batch edges against the batch-1 index
+    _assert_stream_matches_batch(
+        spark, tmp_path, pdf, 14, PipelineConfig(check_substring=False)
+    )
+
+
+def test_incremental_dedup_matches_batch_capped_family(spark, tmp_path):
+    """The same three-path parity over a verbatim family larger than
+    ``band_bucket_cap``: all three paths build candidates with
+    ``candidates.edge_plan``, whose sha-equal pairs keep the family
+    that the band cap drops."""
+    from selfclean_spark.config import PipelineConfig
+
+    cfg = PipelineConfig(check_substring=False, band_bucket_cap=10)
+    pdf, split, family = _family_corpus(spark)
+    edges = _assert_stream_matches_batch(spark, tmp_path, pdf, split, cfg)
+    # the family is a star on its smallest id: 15 sha-equal edges, each
+    # at n_bands_hit = lsh_bands
+    star = [e for e in edges if e[0] in family or e[1] in family]
+    assert len(star) == 15, star
+    assert {e[0] for e in star} == {min(family)}
+    assert {e[2:] for e in star} == {(cfg.signature.lsh_bands, 1.0)}
+
+
+def _assert_stream_matches_batch(spark, tmp_path, pdf, split, cfg):
+    """Drain ``pdf[:split]`` then ``pdf[split:]`` through
+    ``incremental_dedup``, assert the union of per-batch edges equals
+    both batch paths' edges and holds a cross-batch edge; returns it."""
     src = str(tmp_path / "src")
     work = str(tmp_path / "work")
     ckpt = str(tmp_path / "ckpt")
 
-    # split INSIDE a planted dup family (rows 12-14 in this corpus) so
-    # batch 2 must find cross-batch edges against the batch-1 index
-    spark.createDataFrame(pdf.iloc[:14]).write.mode("append").parquet(src)
+    spark.createDataFrame(pdf.iloc[:split]).write.mode("append").parquet(src)
     incremental_dedup(spark, src, work, ckpt, cfg)
     n_first = read_edges(spark, work).count()
 
-    spark.createDataFrame(pdf.iloc[14:]).write.mode("append").parquet(src)
+    spark.createDataFrame(pdf.iloc[split:]).write.mode("append").parquet(src)
     incremental_dedup(spark, src, work, ckpt, cfg)
-    stream_edges = {
-        (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in read_edges(spark, work).collect()
-    }
+    stream_edges = _edge_set(read_edges(spark, work))
     assert len(stream_edges) > n_first  # batch 2 found new edges
 
-    batch_edges = {
-        (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in _batch_edges_for(spark, pdf, cfg).collect()
-    }
-    assert stream_edges == batch_edges
+    for path, batch in _batch_edges_for(spark, pdf, cfg, tmp_path).items():
+        batch_edges = _edge_set(batch)
+        assert stream_edges == batch_edges, path
     # at least one edge crosses the batch boundary (ids are content-
     # derived, so recompute each side's id set)
     ids1 = {
-        r.id for r in with_identity(spark.createDataFrame(pdf.iloc[:14])).select("id").collect()
+        r.id for r in with_identity(spark.createDataFrame(pdf.iloc[:split])).select("id").collect()
     }
     ids2 = {
-        r.id for r in with_identity(spark.createDataFrame(pdf.iloc[14:])).select("id").collect()
+        r.id for r in with_identity(spark.createDataFrame(pdf.iloc[split:])).select("id").collect()
     }
     assert ids1.isdisjoint(ids2)
     crossing = [
-        (a, b) for a, b, _ in stream_edges if (a in ids1) != (b in ids1)
+        (a, b) for a, b, _, _ in stream_edges if (a in ids1) != (b in ids1)
     ]
     assert crossing, "no cross-batch edge found"
+    return stream_edges
 
 
-def _batch_edges_for(spark, pdf, cfg):
-    """Batch-mode truth: the same candidate→verify kernels over the
-    full corpus (mirrors DedupPipeline stages 1-4 without checkpoints)."""
-    from selfclean_spark.operators import candidates as cand_ops
-    from selfclean_spark.operators import verify as verify_ops
-    from selfclean_spark.operators.signatures import band_hashes
+def _edge_set(edges):
+    return {
+        (r.id_a, r.id_b, r.n_bands_hit, round(r.jaccard, 9))
+        for r in edges.collect()
+    }
 
-    ingested = with_identity(spark.createDataFrame(pdf))
-    sigs = compute_signatures(ingested, cfg.signature)
-    pairs = cand_ops.candidate_pairs(
-        band_hashes(sigs, cfg.signature), cfg.band_bucket_cap
-    )
-    return verify_ops.verify_candidates(pairs, ingested, sigs, cfg)
+
+def _batch_edges_for(spark, pdf, cfg, tmp_path):
+    """Batch-mode truth on the full corpus, from both batch paths:
+    ``DedupPipeline`` stages 1-4 and ``dedup.minhash_lsh_pairs``."""
+    from selfclean_spark.catalog import ParquetCatalog
+    from selfclean_spark.operators import dedup as D
+    from selfclean_spark.plans.pipeline import DedupPipeline
+
+    full = spark.createDataFrame(pdf)
+    pipe = DedupPipeline(spark, ParquetCatalog(spark, str(tmp_path / "pipe")), cfg)
+    return {
+        "pipeline": pipe.run(full)["verified_edges"],
+        "minhash_lsh_pairs": D.minhash_lsh_pairs(
+            with_identity(full), "id", "content", cfg
+        ),
+    }
