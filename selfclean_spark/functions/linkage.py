@@ -94,7 +94,7 @@ def to_tree(linkage: np.ndarray) -> _Node:
     return nodes[2 * n - 2]
 
 
-def lad_scores(linkage: np.ndarray, global_leaves: bool = False) -> list[tuple[float, int]]:
+def lad_scores(linkage: np.ndarray) -> list[tuple[float, int]]:
     """The LAD sweep (lad_scoring.py:28-208): DFS left-to-right with
     intervals proportional to subtree size (smaller subtree first),
     rectangle area (end-start)·(dist_parent-dist) accumulated into a
@@ -106,11 +106,9 @@ def lad_scores(linkage: np.ndarray, global_leaves: bool = False) -> list[tuple[f
     white_spaces: list[dict] = []
     scores: list[float] = []
     scoring: list[tuple[float, int]] = []
-    stack: list[tuple[_Node, float, float, float, int | None]] = [
-        (root, 0.0, 1.0, 1.0, None)
-    ]
+    stack: list[tuple[_Node, float, float, float]] = [(root, 0.0, 1.0, 1.0)]
     while stack:
-        node, start, end, dist_parent, n_leaves = stack.pop()
+        node, start, end, dist_parent = stack.pop()
         # white-space bookkeeping (lad_scoring.py:216-289)
         if node.dist > 0.0:
             white_spaces.append(
@@ -135,13 +133,11 @@ def lad_scores(linkage: np.ndarray, global_leaves: bool = False) -> list[tuple[f
             left, right = node.left, node.right
             if left.count > right.count:  # smaller subtree goes left
                 left, right = right, left
-            n_here = n_leaves if n_leaves is not None else node.count
-            p_left = left.count / n_here
-            w_left = start + (end - start) * p_left
-            carry = n_here if global_leaves else None
+            w_left = start + (end - start) * (left.count / node.count)
+            w_right = start + (end - start) * (right.count / node.count)
             # DFS order: left first → push right then left
-            stack.append((right, w_left, start + (end - start) * (right.count / n_here), node.dist, carry))
-            stack.append((left, start, w_left, node.dist, carry))
+            stack.append((right, w_left, w_right, node.dist))
+            stack.append((left, start, w_left, node.dist))
         else:
             scoring.append((sum(scores), node.id))
             leaf_end = end

@@ -13,7 +13,9 @@ instead:
 2. one small action collects per-partition counts (or sums) into
    cumulative offsets, shipped back as an array literal indexed by
    ``_pid`` — an array, not a ``create_map`` lookup, which scans
-   linearly per row once there are thousands of partitions.
+   linearly per row once there are thousands of partitions.  The
+   rank's pass 2 is then one projection; the running sum's is a
+   ``_pid``-keyed window plus a broadcast offset join, all on the JVM.
 
 The pass-1 checkpoint is the one action that sees every row, so an
 aggregate a caller needs over the ranked rows rides it as an
@@ -32,7 +34,6 @@ from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from selfclean_spark import caching
-from selfclean_spark.functions.worker import worker_task
 
 # an Observation and its aggregates, computed by a rank leaf's checkpoint
 Observer = tuple[Observation, list[Column]]
@@ -114,7 +115,6 @@ def with_global_cumsum(
     order_cols: list[Column],
     value_col: str,
     cumsum_col: str = "cumsum",
-    impl: str = "window",
 ) -> DataFrame:
     """Add an INCLUSIVE global running sum of ``value_col`` ordered by
     ``order_cols`` — two-pass like ``with_global_rank`` (range-partition
@@ -124,74 +124,34 @@ def with_global_cumsum(
     (ORDER BY …)`` with no PARTITION BY would serialize the whole
     corpus through one task.
 
-    Two byte-identical pass-2 implementations (fingerprint-equal at 5M
-    and 20M rows; parity pytest):
-
-    - ``impl="window"`` (default): per-partition window keyed by
-      ``_pid`` + broadcast offset join.  Entirely JVM-side, but the
-      window's required clustering makes Spark insert a SECOND
-      full-corpus Exchange (hashpartitioning on ``_pid``) after the
-      range shuffle.  Measured FASTER wherever we can measure
-      (local[32] best-of-2: 1.57 s vs 2.29 s at 5M rows, 3.76 s vs
-      7.21 s at 20M — a local-mode exchange is a memory copy while the
-      Arrow hop costs real CPU).
-    - ``impl="arrow"``: ``mapInPandas`` running sum over the
-      already-sorted partitions — ZERO extra Exchange.  The pick for
-      shuffle-constrained multi-executor clusters, where the second
-      full-corpus exchange is network+disk I/O rather than a local
-      memory copy and the Arrow pass pipelines with the cached scan.
-
-    The A/B and the reasoning live in BENCH/BASELINE.md ("cumsum
-    pass-2").
+    Pass 2 is a per-partition window keyed by ``_pid`` plus a broadcast
+    offset join, entirely JVM-side.  The window's required clustering
+    makes Spark insert a second full-corpus Exchange (hashpartitioning
+    on ``_pid``) after the range shuffle; a ``mapInPandas`` running sum
+    over the sorted partitions avoids it but measured slower (local[32]
+    best-of-2: 1.57 s vs 2.29 s at 5M rows, 3.76 s vs 7.21 s at 20M — a
+    local-mode exchange is a memory copy while the Arrow hop costs real
+    CPU).  The A/B lives in BENCH/BASELINE.md ("cumsum pass-2").
     """
-    from pyspark.sql.types import LongType, StructField, StructType
-
     spark = df.sparkSession
     sorted_df = _sorted_leaf(df, order_cols)
     offsets = _offsets(sorted_df, F.sum(value_col).cast("long"))
-
-    if impl == "window":
-        # the offsets table is built on the JVM (spark.range over the
-        # array literal), never from a driver-side list
-        offsets_df = F.broadcast(
-            spark.range(len(offsets)).select(
-                F.col("id").cast("int").alias("_pid"),
-                _long_array(offsets)[F.col("id")].alias("_offset"),
-            )
+    # the offsets table is built on the JVM (spark.range over the array
+    # literal), never from a driver-side list
+    offsets_df = F.broadcast(
+        spark.range(len(offsets)).select(
+            F.col("id").cast("int").alias("_pid"),
+            _long_array(offsets)[F.col("id")].alias("_offset"),
         )
-        w = (
-            Window.partitionBy("_pid")
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            sorted_df.withColumn("_local", F.sum(value_col).over(w))
-            .join(offsets_df, "_pid")
-            .withColumn(
-                cumsum_col, (F.col("_offset") + F.col("_local")).cast("long")
-            )
-            .drop("_pid", "_local", "_offset")
-        )
-    if impl != "arrow":
-        raise ValueError(f"impl must be 'window' or 'arrow', got {impl!r}")
-
-    offsets_b = spark.sparkContext.broadcast(offsets)
-    out_schema = StructType(
-        sorted_df.schema.fields + [StructField(cumsum_col, LongType(), False)]
     )
-
-    @worker_task
-    def _cumsum(batches):
-        run = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if run is None:
-                run = int(offsets_b.value[int(pdf["_pid"].iloc[0])])
-            cs = pdf[value_col].astype("int64").cumsum() + run
-            run = int(cs.iloc[-1])
-            pdf = pdf.copy()
-            pdf[cumsum_col] = cs.astype("int64")
-            yield pdf
-
-    return sorted_df.mapInPandas(_cumsum, out_schema).drop("_pid")
+    w = (
+        Window.partitionBy("_pid")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        sorted_df.withColumn("_local", F.sum(value_col).over(w))
+        .join(offsets_df, "_pid")
+        .withColumn(cumsum_col, (F.col("_offset") + F.col("_local")).cast("long"))
+        .drop("_pid", "_local", "_offset")
+    )

@@ -29,8 +29,8 @@ evaluate identically (no library hash involved), so the DuckDB oracle
 recomputes fingerprints bit-exactly.  Block digests use md5, which
 Spark and DuckDB share.
 
-100-TB shape (docstrings per operator): fingerprinting is a map-only
-projection (whole-stage codegen, no UDF); the only shuffles are the
+100-TB shape (docstrings per operator): fingerprinting is one map-only
+vectorized numpy pass over Arrow batches; the only shuffles are the
 distinct-postings exchange and the df-capped inverted-index self-join
 — the same count-first-cap discipline as ``dedup.token_jaccard_pairs``
 (a fingerprint appearing in f docs contributes f^2 join rows, so
@@ -66,53 +66,18 @@ WINNOW_B = 257
 WINNOW_M = 1_000_000_007
 
 
-def _winnow_selected_expr(text_sql: str) -> str:
-    """SQL expression: array of DISTINCT selected gram positions'
-    hashes — ``array<struct<p int, h bigint>>`` — for the winnowing of
-    ``text_sql``.
-
-    Built as a single nested higher-order-function expression so the
-    whole fingerprinter stays inside whole-stage codegen: no UDF, no
-    shuffle, no Python.  Windows shorter than w (ng < w) degrade to a
-    single window over all grams, per the paper's boundary handling.
-    """
-    poly = (
-        f"aggregate(sequence(i, i + {WINNOW_K - 1}), 0L,"
-        f" (acc, t) -> (acc * {WINNOW_B}L"
-        f" + ascii(substring({text_sql}, t, 1))) % {WINNOW_M}L)"
-    )
-    hashes = (
-        f"transform(sequence(1, greatest(length({text_sql}) - {WINNOW_K - 1}, 0)),"
-        f" i -> {poly})"
-    )
-    # leftmost-min of each window: strict < keeps the earliest position
-    argmin = (
-        f"aggregate(sequence(j, least(j + {WINNOW_W - 1}, size(hs))),"
-        f" named_struct('p', -1, 'h', 9223372036854775807L),"
-        f" (acc, m) -> if(element_at(hs, m) < acc.h,"
-        f" named_struct('p', m, 'h', element_at(hs, m)), acc))"
-    )
-    # lambda-let: bind the gram-hash array ONCE (CollapseProject would
-    # inline a plain column alias into each of its four uses)
-    return (
-        f"element_at(transform(array({hashes}), hs -> "
-        f"array_distinct(transform("
-        f" sequence(1, greatest(size(hs) - {WINNOW_W - 1}, 1)),"
-        f" j -> {argmin}))), 1)"
-    )
-
-
 def _winnow_hashes_np(s: str) -> np.ndarray:
     """Numpy winnowing of one document: hashes at the DISTINCT selected
     positions, in position order (a multiset — one hash value can be
     selected at several positions).
 
-    Bit-identical to the native SQL expression and to the DuckDB twin:
-    the same (acc * B + c) mod M rolling hash (int64 never overflows:
+    Bit-identical to the DuckDB twin: the same ``trim`` (SQL trims
+    spaces only, never newlines or tabs — hence ``strip(" ")``), the
+    same (acc * B + c) mod M rolling hash (int64 never overflows:
     acc < M = 1e9+7, so acc * 257 + 255 < 2^63) and the same
     leftmost-min tie rule (``np.argmin`` returns the first minimum).
     """
-    s = s.strip()
+    s = s.strip(" ")
     ng = len(s) - WINNOW_K + 1
     if ng <= 0:
         return np.empty(0, dtype=np.int64)
@@ -145,7 +110,7 @@ def _winnow_report_batches(
             "fp_max": np.zeros(n, dtype=np.int64),
         }
         for r, s in enumerate(texts):
-            out["n_grams"][r] = max(len(s.strip()) - WINNOW_K + 1, 0)
+            out["n_grams"][r] = max(len(s.strip(" ")) - WINNOW_K + 1, 0)
             hs = _winnow_hashes_np(s)
             if hs.size:
                 out["n_fp"][r] = hs.size
@@ -173,69 +138,33 @@ def _winnow_posting_batches(
         )
 
 
-def winnow_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, impl: str = "arrow"
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document winnowing fingerprint report: gram count,
     fingerprint count, and min/max/xor digests of the selected hashes.
 
     The xor/min/max triple pins the exact fingerprint SET (not just
     its size) onto the oracle surface without emitting ~n_fp rows per
-    doc.  Map-only either way: zero shuffles before the output sort.
-    Docs shorter than k grams are emitted with n_fp = 0 and zeroed
-    digests, keeping the report total == corpus size.
+    doc.  Map-only: zero shuffles before the output sort.  Docs shorter
+    than k grams are emitted with n_fp = 0 and zeroed digests, keeping
+    the report total == corpus size.
 
-    ``impl="arrow"`` (default) runs the kernel as a vectorized numpy
-    batch over Arrow (the same fast path the MinHash signatures use) —
-    measured 16x end-to-end at sf0.01/local[8] (8.07 s -> 0.50 s; the
-    native expression's higher-order lambdas are interpreted per
-    element, not codegen'd).  ``impl="native"``
-    keeps the pure-SQL single-expression form (zero Python; the
-    parity twin of the DuckDB oracle).  Outputs are bit-identical
-    (tested) — the trade is documented in BENCH/BASELINE.md.
+    The kernel is a vectorized numpy batch over Arrow (the same fast
+    path the MinHash signatures use) — measured 16x end-to-end at
+    sf0.01/local[8] (8.07 s -> 0.50 s) against a pure-SQL
+    single-expression form, whose higher-order lambdas are interpreted
+    per element, not codegen'd (BENCH/BASELINE.md).  The DuckDB twin
+    is the reference.
     """
-    if impl == "arrow":
-        return (
-            fanout_few_files(
-                df.select(
-                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-                )
-            )
-            .mapInPandas(
-                _winnow_report_batches,
-                schema=(
-                    "doc_id long, n_grams long, n_fp long,"
-                    " fp_xor long, fp_min long, fp_max long"
-                ),
-            )
-            .orderBy("doc_id")
-        )
-    sel = _winnow_selected_expr(f"trim({text_col})")
     return (
-        fanout_few_files(df).select(
-            F.col(id_col).alias("doc_id"),
-            F.expr(
-                f"greatest(length(trim({text_col})) - {WINNOW_K - 1}, 0)"
-            ).cast("long").alias("n_grams"),
-            F.expr(sel).alias("_sel"),
+        fanout_few_files(
+            df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
         )
-        .select(
-            "doc_id",
-            "n_grams",
-            F.when(F.col("n_grams") > 0, F.size("_sel"))
-            .otherwise(F.lit(0)).cast("long").alias("n_fp"),
-            F.when(
-                F.col("n_grams") > 0,
-                F.expr("aggregate(_sel, 0L, (a, x) -> a ^ x.h)"),
-            ).otherwise(F.lit(0)).cast("long").alias("fp_xor"),
-            F.when(
-                F.col("n_grams") > 0,
-                F.expr("array_min(transform(_sel, x -> x.h))"),
-            ).otherwise(F.lit(0)).cast("long").alias("fp_min"),
-            F.when(
-                F.col("n_grams") > 0,
-                F.expr("array_max(transform(_sel, x -> x.h))"),
-            ).otherwise(F.lit(0)).cast("long").alias("fp_max"),
+        .mapInPandas(
+            _winnow_report_batches,
+            schema=(
+                "doc_id long, n_grams long, n_fp long,"
+                " fp_xor long, fp_min long, fp_max long"
+            ),
         )
         .orderBy("doc_id")
     )
@@ -247,35 +176,20 @@ def winnow_clone_pairs(
     text_col: str,
     min_shared: int = 5,
     max_doc_freq: int = 1_000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints
     — MOSS's clone evidence, distributed.
 
-    Plan: map-only fingerprinting (vectorized numpy over Arrow by
-    default; ``impl="native"`` for the zero-Python expression twin —
-    bit-identical outputs, tested) -> distinct (fp, id) postings (one
-    Exchange) -> df-capped inverted-index self-join (the f^2 cut;
-    count-first, same discipline as ``dedup.token_jaccard_pairs``) ->
-    per-pair shared count + overlap ratio vs the smaller fingerprint
-    set.  Fingerprints are 8-byte ints end-to-end: content never
-    shuffles.
+    Plan: map-only fingerprinting (vectorized numpy over Arrow) ->
+    distinct (fp, id) postings (one Exchange) -> df-capped
+    inverted-index self-join (the f^2 cut; count-first, same discipline
+    as ``dedup.token_jaccard_pairs``) -> per-pair shared count +
+    overlap ratio vs the smaller fingerprint set.  Fingerprints are
+    8-byte ints end-to-end: content never shuffles.
     """
-    if impl == "arrow":
-        fps = fanout_few_files(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        ).mapInPandas(_winnow_posting_batches, schema="id long, h long")
-    else:
-        sel = _winnow_selected_expr(f"trim({text_col})")
-        fps = fanout_few_files(df).select(
-            F.col(id_col).alias("id"),
-            F.expr(sel).alias("_sel"),
-        ).select(
-            "id",
-            F.explode(
-                F.array_distinct(F.expr("transform(_sel, x -> x.h)"))
-            ).alias("h"),
-        )
+    fps = fanout_few_files(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    ).mapInPandas(_winnow_posting_batches, schema="id long, h long")
     sizes = (
         cand_ops.capped_postings(fps, "h", max_doc_freq)
         .groupBy("id")

@@ -5,91 +5,62 @@ The reference's Annoy approximate-kNN join
 builds a single-node angular index; the distributed analogs here are:
 
 * ``cosine_topk`` — exact brute-force top-k for a (small, broadcast)
-  query set: the baseline & oracle.  Dot products are native
-  ``aggregate(zip_with(...))`` expressions (JVM, no Python).
-* ``lsh_topk`` — random-hyperplane LSH (sign sketch, the vector
-  SimHash): bucket vectors by sign-pattern prefixes, search only
-  bucket collisions.  The scale path: candidate count per query is
-  ~N/2^bits per table instead of N.
+  query set: the baseline & oracle.
+* ``lsh_topk`` / ``embedding_cosine_dup_pairs`` — random-hyperplane
+  LSH (sign sketch, the vector SimHash): bucket vectors by sign-pattern
+  prefixes, search only bucket collisions.  The scale path: candidate
+  count per query is ~N/2^bits per table instead of N.  Over-cap
+  buckets are dropped; byte-identical vectors pair through the
+  sha-equality kernel of the text path instead.
+* ``ivf_topk`` — inverted-file cells around hash-sampled centroids.
+* ``semdedup_prune`` — SemDeDup cell-local pruning, integer-exact.
+
+Every score is the one native :func:`cosine_similarity` expression
+(``aggregate(zip_with(...))``: JVM, whole-stage codegen, no Python in
+the pair hot path).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 from pyspark.storagelevel import StorageLevel
 
-from selfclean_spark.functions.distances import cosine_similarity, get_distance
 from selfclean_spark.functions.worker import worker_task
 from selfclean_spark.operators import candidates as cand_ops
-
-# native cosine similarity between two array<float/double> cols
-# (canonical home: functions.distances — shared with the kernel registry)
-_cosine = cosine_similarity
 
 # max rows per (table_id, bucket) sign-sketch bucket before the bucket
 # is dropped from the candidate join — the vector twin of the text
 # path's band_bucket_cap / simhash block_cap (count-first, never an
 # m² expansion).  Degenerate buckets are dominated by identical/near-
 # identical embedding families (zero vectors, default embeddings),
-# whose pairs the exact fast path below recovers from full-vector
-# equality.
+# whose pairs the exact branch of :func:`_sketch_pairs` recovers from
+# full-vector equality.
 DEFAULT_BUCKET_CAP = 2_000
 
 
-def _capped_signatures(
-    sigs: DataFrame, bucket_cap: int
-) -> tuple[DataFrame, DataFrame]:
-    """(id, vec_sha, table_id, bucket) → (under-cap rows, the full
-    signature stream — the exact-pair rescue reads the latter: it must
-    see rows in DROPPED buckets too).
-
-    Same count-first discipline as ``candidates.capped_self_join``:
-    over-cap keys are filtered out before the self-join expands, so a
-    10^6-copy embedding family can never create 10^12 candidate rows.
-    This keeps its own count window instead of calling
-    ``capped_self_join`` because the rescue reads the UNFILTERED window
-    output: both pair sides and that read are served by AQE exchange
-    reuse from the one hash(table_id, bucket) shuffle.  The hyperplane
-    matmul UDF therefore runs once, on the exchange's map side, with no
-    persist (a cached relation below the exchange would BREAK exchange
-    reuse — InMemoryRelation subtrees do not canonicalize equal in
-    Spark 4.1 — re-running the UDF per consumer).  The 8-byte
-    ``vec_sha`` rides the same rows so the rescue still costs no second
-    corpus pass.
-    """
-    keys = ["table_id", "bucket"]
-    plain = sigs.select(
-        "id",
-        "vec_sha",
-        *keys,
-        F.count(F.lit(1)).over(Window.partitionBy(*keys)).alias("bs"),
+def cosine_similarity(a: str, b: str) -> Column:
+    """Native cosine similarity between two array<float/double> cols."""
+    dot = F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
+        " cast(0.0 as double), (acc, v) -> acc + v)"
     )
-    capped = plain.filter(
-        (F.col("bs") >= 2) & (F.col("bs") <= bucket_cap)
-    ).drop("bs")
-    return capped, plain.drop("bs")
-
-
-def _exact_vector_pairs(sigs_cached: DataFrame, pair_cap: int) -> DataFrame:
-    """(id_a < id_b) pairs of byte-identical embedding vectors — the
-    fast path that keeps identical-vector families (the very rows that
-    overflow sign-sketch buckets) pairable after the bucket cap.
-
-    Reads the full signature stream off the shared bucket exchange
-    (which carries ``vec_sha`` computed in the same scan as the sketch
-    — no second corpus pass; one table's rows suffice since vec_sha
-    repeats per table) and reuses the sha-equality kernel: groups ≤
-    ``pair_cap`` emit all pairs, larger groups emit linear star edges
-    (same components, bounded output) — see
-    ``candidates.exact_duplicate_pairs``."""
-    keyed = sigs_cached.filter(F.col("table_id") == 0).select(
-        "id", F.col("vec_sha").alias("content_sha")
+    na = F.sqrt(
+        F.expr(
+            f"aggregate({a}, cast(0.0 as double),"
+            " (acc, v) -> acc + cast(v as double) * cast(v as double))"
+        )
     )
-    return cand_ops.exact_duplicate_pairs(keyed, pair_cap=pair_cap)
+    nb = F.sqrt(
+        F.expr(
+            f"aggregate({b}, cast(0.0 as double),"
+            " (acc, v) -> acc + cast(v as double) * cast(v as double))"
+        )
+    )
+    return dot / (na * nb)
 
 
 def cosine_topk(
@@ -114,7 +85,7 @@ def cosine_topk(
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine("qvec", "nvec"))
+        .withColumn("cosine", cosine_similarity("qvec", "nvec"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -123,45 +94,6 @@ def cosine_topk(
         scored.withColumn("knn_rank", F.row_number().over(w))
         .filter(F.col("knn_rank") <= k)
         .select("query_id", "knn_rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def distance_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k nearest neighbors under a REGISTERED distance kernel
-    (``functions.distances.DISTANCE_KERNELS``) — the pluggable-metric
-    analog of the reference's custom distance function hook
-    (selfclean_cleaner.py:39-40,77-80; e.g. metric="projective" ranks
-    antipodal vectors as duplicates).  Same broadcast-query physical
-    shape as :func:`cosine_topk`; ties break on neighbor id."""
-    kernel = get_distance(metric)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("dist", kernel("qvec", "nvec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .select(
-            "query_id", "knn_rank", "neighbor_id",
-            F.round("dist", 6).alias("dist"),
-        )
     )
 
 
@@ -197,13 +129,45 @@ def hyperplane_signatures(
         ).sum(axis=2)
         return pd.Series(list(packed.astype(np.int64)))
 
-    # vec_sha rides the same scan (native xxhash64 over the raw array):
-    # the exact-duplicate rescue path then needs no second corpus pass
     return embeddings.select(
         F.col(id_col).alias("id"),
-        F.xxhash64(F.col(vec_col)).alias("vec_sha"),
         F.posexplode(bucket_arr(F.col(vec_col))).alias("table_id", "bucket"),
     )
+
+
+def _sketch_pairs(
+    embeddings: DataFrame,
+    dim: int | None,
+    n_bits: int,
+    n_tables: int,
+    seed: int,
+    id_col: str,
+    vec_col: str,
+    bucket_cap: int,
+) -> DataFrame:
+    """Distinct (id_a < id_b) candidate pairs: vectors sharing a
+    sign-sketch bucket in any table, plus byte-identical vectors.
+
+    Bucket pairs come from ``candidates.capped_self_join`` on
+    (table_id, bucket): count-first, so a 10^6-copy embedding family
+    can never create 10^12 candidate rows.  The families that overflow
+    a bucket are mostly identical vectors, so every identical pair is
+    added from ``candidates.exact_duplicate_pairs`` over
+    (id, xxhash64(vec)) projected from the input: groups ≤
+    ``bucket_cap`` emit all pairs, larger groups emit linear star edges
+    on the group minimum (same components, bounded output)."""
+    if dim is None:
+        dim = len(embeddings.select(vec_col).first()[0])
+    sigs = hyperplane_signatures(
+        embeddings, dim, n_bits, n_tables, seed, id_col, vec_col
+    )
+    bucket = cand_ops.capped_self_join(sigs, ["table_id", "bucket"], bucket_cap)
+    keyed = embeddings.select(
+        F.col(id_col).alias("id"),
+        F.xxhash64(F.col(vec_col)).alias("content_sha"),
+    )
+    exact = cand_ops.exact_duplicate_pairs(keyed, pair_cap=bucket_cap)
+    return bucket.select("id_a", "id_b").unionByName(exact).distinct()
 
 
 def lsh_topk(
@@ -216,7 +180,6 @@ def lsh_topk(
     vec_col: str = "embedding",
     dim: int | None = None,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
-    exact_from_scan: bool = False,
 ) -> DataFrame:
     """Approximate all-pairs top-k: vectors meet iff they share a
     sign-sketch bucket in any table; exact cosine is computed only for
@@ -224,62 +187,29 @@ def lsh_topk(
 
     Buckets larger than ``bucket_cap`` are dropped from the join
     (count-first — no m² expansion on degenerate embedding families);
-    byte-identical vectors stay pairable through the exact fast path
+    byte-identical vectors stay pairable through the exact branch
     (cosine exactly 1.0, star-shaped beyond the cap), so every member
     of an over-cap identical family still reports its exact twin(s).
-
-    ``exact_from_scan`` picks where the exact-duplicate branch reads
-    its (id, vec_sha) keys — output is byte-identical either way, only
-    the physical plan differs:
-
-    - ``False`` (scale default): ride the persisted sketch table, so
-      the corpus is scanned ONCE total (the hyperplane UDF scan also
-      carries the native xxhash64) — at 10⁹ vectors a second full
-      corpus pass dwarfs everything else.
-    - ``True`` (small-corpus): read a fresh native-only scan of the
-      source (xxhash64, no Python UDF).  Below ~10⁵ rows the second
-      parquet scan is microseconds, while the cache path serializes
-      the exact branch behind the sketch-UDF persist barrier — ~8
-      small-stage scheduling costs the A/B in BENCH/BASELINE.md
-      measures at ~1.5 s on the 2k-row bench corpus.  Callers that
-      know the corpus size (e.g. ``queries.lsh_topk_ann`` via its
-      memoized parquet count) flip this adaptively."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    sigs = hyperplane_signatures(
-        embeddings, dim, n_bits, n_tables, seed, id_col, vec_col
+    Pass ``dim`` to avoid the driver-side schema-probe action."""
+    pairs = _sketch_pairs(
+        embeddings, dim, n_bits, n_tables, seed, id_col, vec_col, bucket_cap
     )
-    capped, sx = _capped_signatures(sigs, bucket_cap)
-    a = capped.select("table_id", "bucket", F.col("id").alias("query_id"))
-    b = capped.select("table_id", "bucket", F.col("id").alias("neighbor_id"))
-    if exact_from_scan:
-        keyed = embeddings.select(
-            F.col(id_col).alias("id"),
-            F.xxhash64(F.col(vec_col)).alias("content_sha"),
-        )
-        exact = cand_ops.exact_duplicate_pairs(keyed, pair_cap=bucket_cap)
-    else:
-        exact = _exact_vector_pairs(sx, bucket_cap)
-    # kNN is directed: an exact pair feeds both endpoints' neighbor lists
-    exact_directed = exact.select(
-        F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id")
-    ).unionByName(
-        exact.select(
-            F.col("id_b").alias("query_id"), F.col("id_a").alias("neighbor_id")
-        )
-    )
-    cand = (
-        a.join(b, ["table_id", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .unionByName(exact_directed)
-        .distinct()
-    )
+    # kNN is directed: a pair feeds both endpoints' neighbor lists.  An
+    # explode keeps the pair plan (sketch UDF included) a single
+    # subtree, where a union would plan it twice.
+    cand = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id")),
+                F.struct(F.col("id_b").alias("query_id"), F.col("id_a").alias("neighbor_id")),
+            )
+        ).alias("p")
+    ).select("p.query_id", "p.neighbor_id")
     vecs = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     scored = (
         cand.join(vecs.select(F.col("id").alias("query_id"), F.col("vec").alias("qvec")), "query_id")
         .join(vecs.select(F.col("id").alias("neighbor_id"), F.col("vec").alias("nvec")), "neighbor_id")
-        .withColumn("cosine", _cosine("qvec", "nvec"))
+        .withColumn("cosine", cosine_similarity("qvec", "nvec"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -297,23 +227,12 @@ def ivf_centroids(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kmeans_iters: int = 0,
 ) -> np.ndarray:
     """Deterministic IVF coarse centroids: the ``n_centroids`` vectors
     with the smallest ``xxhash64(id, seed)`` — a seeded uniform sample
-    (at 10^9+ vectors, one TakeOrdered job).  L2-normalized rows.
-
-    ``kmeans_iters > 0`` runs that many distributed spherical-k-means
-    Lloyd refinements on top of the sample: assign every vector to its
-    nearest centroid (one vectorized matmul per Arrow batch), average
-    per (cell, dimension) — a narrow native aggregation of exploded
-    (cell, dim, value) triples, C·D rows collected — renormalize.
-    Refinement tightens cells (better recall at the same n_probe) at
-    the cost of ``kmeans_iters`` extra jobs; note the per-cell float
-    averages are partition-order dependent at the ulp level, so
-    refined centroids are deterministic only for a fixed partitioning
-    (the hash-sample default is deterministic unconditionally — why it
-    stays the default and the oracle-checked configuration)."""
+    (at 10^9+ vectors, one TakeOrdered job).  L2-normalized rows.  The
+    sample is deterministic for any partitioning, which is what lets
+    the DuckDB twin check ``ivf_topk`` at full probe."""
     rows = (
         embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
         .orderBy(F.xxhash64("id", F.lit(seed)), F.col("id"))
@@ -323,41 +242,7 @@ def ivf_centroids(
     mat = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0.0] = 1.0
-    cents = mat / norms
-
-    for _ in range(kmeans_iters):
-        planes = cents  # closure snapshot for this round
-
-        @F.pandas_udf("int")
-        @worker_task
-        def assign(vecs: pd.Series) -> pd.Series:
-            m = np.stack(vecs.to_numpy()).astype(np.float64)
-            nrm = np.linalg.norm(m, axis=1, keepdims=True)
-            nrm[nrm == 0.0] = 1.0
-            return pd.Series(
-                np.argmax((m / nrm) @ planes.T, axis=1).astype(np.int32)
-            )
-
-        sums = (
-            embeddings.select(
-                assign(F.col(vec_col)).alias("cell"),
-                F.posexplode(F.col(vec_col)).alias("dim", "val"),
-            )
-            .groupBy("cell", "dim")
-            .agg(F.avg(F.col("val").cast("double")).alias("mean"))
-            .collect()
-        )
-        new = cents.copy()  # empty cells keep their previous centroid
-        got = {}
-        for r in sums:
-            got.setdefault(int(r["cell"]), {})[int(r["dim"])] = float(r["mean"])
-        for c, dims in got.items():
-            for d, v in dims.items():
-                new[c, d] = v
-        nrm = np.linalg.norm(new, axis=1, keepdims=True)
-        nrm[nrm == 0.0] = 1.0
-        cents = new / nrm
-    return cents
+    return mat / norms
 
 
 def ivf_topk(
@@ -369,14 +254,14 @@ def ivf_topk(
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kmeans_iters: int = 0,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k cosine neighbors — the
     cell-partitioned scale path next to ``lsh_topk``'s sign-sketch one.
 
     Index: every data vector is assigned to its nearest of
-    ``n_centroids`` coarse centroids (one vectorized matmul per Arrow
-    batch).  Search: each query probes its ``n_probe`` nearest cells
+    ``n_centroids`` coarse centroids — the hash sample of
+    :func:`ivf_centroids`, no k-means refinement — with one vectorized
+    matmul per Arrow batch.  Search: each query probes its ``n_probe`` nearest cells
     and reranks EXACTLY (native cosine) inside them.  With
     ``n_probe == n_centroids`` the search is exhaustive and the result
     equals exact :func:`cosine_topk` — that configuration is the
@@ -387,9 +272,7 @@ def ivf_topk(
     and the cell assignment shuffles ids only (vectors join back by
     id) — the same candidates-only discipline as the text LSH path.
     """
-    cents = ivf_centroids(
-        embeddings, n_centroids, seed, id_col, vec_col, kmeans_iters
-    )
+    cents = ivf_centroids(embeddings, n_centroids, seed, id_col, vec_col)
 
     @F.pandas_udf("int")
     @worker_task
@@ -425,7 +308,7 @@ def ivf_topk(
     scored = (
         cells.join(F.broadcast(probes), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine("qvec", "nvec"))
+        .withColumn("cosine", cosine_similarity("qvec", "nvec"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
@@ -459,28 +342,17 @@ def embedding_cosine_dup_pairs(
     Hot-bucket safety mirrors the text path (band cap / simhash block
     cap): buckets beyond ``bucket_cap`` are count-first dropped, while
     byte-identical vectors — the families that create such buckets —
-    are recovered by the exact fast path (all pairs up to the cap,
-    linear star edges beyond it: same connected components, and every
-    member still appears in a cosine-1.0 pair)."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    sigs = hyperplane_signatures(embeddings, dim, n_bits, n_tables, seed, id_col, vec_col)
-    capped, sx = _capped_signatures(sigs, bucket_cap)
-    a = capped.select("table_id", "bucket", F.col("id").alias("id_a"))
-    b = capped.select("table_id", "bucket", F.col("id").alias("id_b"))
-    exact = _exact_vector_pairs(sx, bucket_cap)
-    cand = (
-        a.join(b, ["table_id", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .unionByName(exact)
-        .distinct()
+    are recovered by the exact branch of :func:`_sketch_pairs` (all
+    pairs up to the cap, linear star edges beyond it: same connected
+    components, and every member still appears in a cosine-1.0 pair)."""
+    cand = _sketch_pairs(
+        embeddings, dim, n_bits, n_tables, seed, id_col, vec_col, bucket_cap
     )
     vecs = embeddings.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     return (
         cand.join(vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("va")), "id_a")
         .join(vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("vb")), "id_b")
-        .withColumn("cosine", _cosine("va", "vb"))
+        .withColumn("cosine", cosine_similarity("va", "vb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )

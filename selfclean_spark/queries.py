@@ -794,14 +794,7 @@ def lsh_topk_ann(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     # dim=64 is the testdata embedding width (TESTDATA.md) — passing it
     # avoids a driver-side first() action inside the query builder.
-    # Small corpora read the exact-duplicate branch off a second native
-    # parquet scan instead of waiting on the sketch persist (identical
-    # output, ~1.5 s less fixed-stage latency at sf0.1 — see lsh_topk);
-    # at scale the single-corpus-pass cache path wins.
-    small = _table_count(spark, sf_dir, "embeddings") < 100_000
-    return S.lsh_topk(
-        e, k=5, n_bits=10, n_tables=6, dim=64, exact_from_scan=small
-    ).select(
+    return S.lsh_topk(e, k=5, n_bits=10, n_tables=6, dim=64).select(
         "query_id", F.col("knn_rank").cast("long").alias("knn_rank"),
         "neighbor_id", "cosine",
     )
@@ -814,7 +807,7 @@ def lsh_topk_planted(spark, sf_dir):
     recall-curve target, rows-only).  Structurally exact here: a
     planted copy collides with its original in EVERY LSH table
     (identical sign pattern) and additionally rides the exact-vector
-    fast path, so the twin is always a candidate; its cosine ≈ 1.0
+    branch, so the twin is always a candidate; its cosine ≈ 1.0
     beats every natural neighbor (max natural cosine < 0.9), so the
     approximate rank-1 equals the exact rank-1 for every query that
     passes the ≥ 0.95 filter — which the DuckDB twin recomputes by
@@ -2167,11 +2160,10 @@ def export_shard_plan(spark, sf_dir):
     100-TB shape: the global running sum comes from
     ``functions.rank.with_global_cumsum`` — range-partition + collected
     per-partition sums (#partitions rows on the driver), NOT a
-    single-partition ``sum() OVER (ORDER BY …)``; pass 2 uses the
-    measured-faster JVM window implementation (the zero-extra-Exchange
-    Arrow twin exists for shuffle-constrained clusters — byte-identical
-    outputs, A/B in BENCH/BASELINE.md); the shard aggregate is map-side
-    combinable, and the manifest is #shards rows.  Integer arithmetic
+    single-partition ``sum() OVER (ORDER BY …)``; pass 2 is a
+    ``_pid``-keyed JVM window (A/B against an Arrow pass in
+    BENCH/BASELINE.md); the shard aggregate is map-side combinable, and
+    the manifest is #shards rows.  Integer arithmetic
     end-to-end — bit-exact against the window-cumsum DuckDB twin."""
     from selfclean_spark.functions.rank import with_global_cumsum
 

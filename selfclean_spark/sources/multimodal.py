@@ -2,13 +2,12 @@
 metadata, with Arrow-batched decode/feature plumbing.
 
 The reference decodes real images through torchvision transforms
-(selfclean/cleaner/selfclean.py:118-125 resize/crop/normalize).  The
-image/audio libraries are NOT in this container, so the decode step is
-STUBBED: ``decode_image`` raises ``NotImplementedError`` unless a
-decoder is importable, and ``fake_decode_features`` provides a
-deterministic content-hash-derived feature vector so the Spark-side
+(selfclean/cleaner/selfclean.py:118-125 resize/crop/normalize).  No
+decoder ships here: ``fake_decode_features`` derives a deterministic
+feature vector from the content bytes, and ``byte_feature_stats``
+computes integer features a DuckDB twin re-derives, so the Spark-side
 plumbing — schema, partitioning, UDF signature, Arrow batch shape — is
-real and tested end-to-end.  Swapping in PIL/torchvision touches only
+real and tested end-to-end.  A real decoder + encoder replaces only
 the kernel body, not the plan.
 """
 
@@ -53,28 +52,6 @@ FEATURE_SCHEMA = StructType(
         StructField("feature", ArrayType(FloatType(), False), False),
     ]
 )
-
-
-def _try_import_pil():
-    try:  # pragma: no cover - PIL absent in this container
-        from PIL import Image  # noqa: PLC0415
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_image(data: bytes):  # pragma: no cover - real decoder path
-    """Real decode path — requires an image library (absent here)."""
-    pil = _try_import_pil()
-    if pil is None:
-        raise NotImplementedError(
-            "image decoding requires PIL/torchvision, not present in this "
-            "container; use fake_decode_features for plumbing tests"
-        )
-    import io  # noqa: PLC0415
-
-    return pil.open(io.BytesIO(data))
 
 
 def fake_decode_features(data: bytes, dim: int = 16) -> np.ndarray:

@@ -1,15 +1,15 @@
 """Code-payload clone operators: winnowing + block clones.
 
 Differential tests pin the Spark winnowing kernel to a pure-Python
-re-implementation of the SIGMOD'03 algorithm on seeded random corpora
-(including every boundary class: ng = 0, ng = 1, 1 < ng < w), and
-planted-clone tests assert the detection semantics the operators
-exist for.  Plan tests pin the no-UDF / no-content-shuffle claims.
+re-implementation of the SIGMOD'03 algorithm and to the DuckDB twin on
+seeded random corpora (including every boundary class: ng = 0, ng = 1,
+1 < ng < w, and non-space edge whitespace), and planted-clone tests
+assert the detection semantics the operators exist for.  Plan tests
+pin the one-pass / no-content-shuffle claims.
 """
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
 
 from selfclean_spark.operators import codeclean as CC
@@ -18,8 +18,10 @@ K, W, B, M = CC.WINNOW_K, CC.WINNOW_W, CC.WINNOW_B, CC.WINNOW_M
 
 
 def _py_winnow(s: str):
-    """Pure-Python winnowing: (n_grams, n_fp, xor, min, max)."""
-    s = s.strip()
+    """Pure-Python winnowing: (n_grams, n_fp, xor, min, max).  SQL
+    ``trim`` strips spaces only, so the text is stripped of spaces
+    only."""
+    s = s.strip(" ")
     ng = max(len(s) - K + 1, 0)
     hs = []
     for i in range(ng):
@@ -43,7 +45,7 @@ def _py_winnow(s: str):
 
 
 def _fp_set(s: str) -> set[int]:
-    s = s.strip()
+    s = s.strip(" ")
     ng = max(len(s) - K + 1, 0)
     hs = []
     for i in range(ng):
@@ -65,10 +67,15 @@ def _rand_text(rng: random.Random, n_words: int) -> str:
     return " ".join(rng.choice(vocab) for _ in range(n_words))
 
 
-@pytest.mark.parametrize("impl", ["arrow", "native"])
-def test_winnow_kernel_differential(spark, impl):
-    """Seeded random corpus incl. every gram-count boundary class —
-    BOTH Spark impls == pure-Python winnowing, field for field."""
+def test_winnow_kernel_differential(spark):
+    """Seeded random corpus incl. every gram-count boundary class and
+    texts ending in newlines or led by tabs — the Spark kernel ==
+    pure-Python winnowing == the DuckDB twin, field for field."""
+    import duckdb
+    import pandas as pd
+
+    from selfclean_spark.oracles import ORACLES
+
     rng = random.Random(7)
     texts = [
         "",  # ng = 0 (empty)
@@ -77,26 +84,30 @@ def test_winnow_kernel_differential(spark, impl):
         "abcdefghijklmnopqrstuvwxy",  # 1 < ng = 6 < w
         " padded with spaces  ",  # trim path, ng = 0 after trim
         "y" * (K + W - 1),  # ng = w exactly (single full window)
+        # trim strips spaces only: trailing newlines and a leading tab
+        # are grams like any other character
+        "def f(x):\n    return x + 1  # a small function body here\n",
+        "\tindented line of code here();\n\n",
+        "  \r\nmixed whitespace around a body of text\t \n ",
     ] + [_rand_text(rng, rng.randint(3, 60)) for _ in range(40)]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = {
         r["doc_id"]: (r["n_grams"], r["n_fp"], r["fp_xor"], r["fp_min"], r["fp_max"])
-        for r in CC.winnow_fingerprints(df, "doc_id", "text", impl=impl).collect()
+        for r in CC.winnow_fingerprints(df, "doc_id", "text").collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    )
+    twin = {
+        int(r[0]): tuple(int(v) for v in r[1:])
+        for r in con.execute(ORACLES["winnow_fingerprints"]).fetchall()
     }
     for i, t in enumerate(texts):
-        assert got[i] == _py_winnow(t), (impl, i, repr(t))
-
-
-def test_winnow_pair_impls_identical(spark):
-    """The arrow and native pair paths are bit-identical on the real
-    corpus — the A/B contract that lets the fast path ship."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = CC.winnow_clone_pairs(docs, "doc_id", "text", impl="arrow").collect()
-    b = CC.winnow_clone_pairs(docs, "doc_id", "text", impl="native").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) > 0
+        assert got[i] == _py_winnow(t), (i, repr(t))
+        assert got[i] == twin[i], (i, repr(t))
 
 
 def test_winnow_guarantee_on_cloned_span(spark):
@@ -170,27 +181,9 @@ def test_block_clone_unaligned_copy_not_matched(spark):
     assert CC.block_clone_pairs(df, "doc_id", "text").count() == 0
 
 
-def test_winnow_plan_native_no_udf_single_exchange(spark):
-    """impl='native' claims map-only whole-stage-codegen: no Python
-    evaluation node, no key-partitioned shuffle — the only Exchanges
-    are the output sort (range) and the conditional single-split scan
-    fan-out (round-robin; identity at lake scale).  Counted by
-    partitioning TYPE, not total (ADVICE r5 #3: totals are brittle)."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = (
-        CC.winnow_fingerprints(docs, "doc_id", "text", impl="native")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 0, plan
-    assert plan.count("Exchange rangepartitioning") == 1, plan
-
-
 def test_winnow_plan_arrow_one_pass_pruned(spark):
-    """impl='arrow' (default): exactly ONE MapInPandas, no row-wise
-    Python, scan pruned to (doc_id, text), single output-sort
-    Exchange."""
+    """Exactly ONE MapInPandas, no row-wise Python, scan pruned to
+    (doc_id, text), single output-sort Exchange."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     plan = (
         CC.winnow_fingerprints(docs, "doc_id", "text")

@@ -234,21 +234,18 @@ def vecs_50k(spark):
 def test_ivf_recall_curve_50k(vecs_50k):
     """VERDICT r2 #6: the IVF approximation knob at scale.  At 50k
     vectors, recall vs exact top-10 must be ≥0.9 when probing 1/4 of
-    the cells, the recall curve must be monotone in n_probe, and two
-    Lloyd refinement iterations (kmeans_iters) must hold the 1/4-probe
-    gate too."""
+    the cells, and the recall curve must be monotone in n_probe."""
     q = vecs_50k.filter("vec_id < 20")
     exact = {
         (r.query_id, r.neighbor_id)
         for r in S.cosine_topk(vecs_50k, q, k=10).collect()
     }
 
-    def recall(n_probe, kmeans_iters=0):
+    def recall(n_probe):
         got = {
             (r.query_id, r.neighbor_id)
             for r in S.ivf_topk(
-                vecs_50k, q, k=10, n_centroids=32, n_probe=n_probe,
-                kmeans_iters=kmeans_iters,
+                vecs_50k, q, k=10, n_centroids=32, n_probe=n_probe
             ).collect()
         }
         return len(exact & got) / len(exact)
@@ -256,8 +253,6 @@ def test_ivf_recall_curve_50k(vecs_50k):
     r2, r8 = recall(2), recall(8)
     assert r8 >= 0.9, f"recall at n_probe/n_centroids=1/4 is {r8}"
     assert r8 >= r2, f"recall not monotone: probe2={r2} probe8={r8}"
-    r8_km = recall(8, kmeans_iters=2)
-    assert r8_km >= 0.9, f"k-means-refined recall {r8_km}"
 
 
 def test_embedding_cosine_dup_pairs(vecs):
@@ -316,24 +311,6 @@ def test_lsh_topk_capped_still_reports_exact_twins(hot_family_vecs):
     # the under-cap near-dup pair still meets through its bucket
     assert top1[2000].neighbor_id == 2001
     assert top1[2000].cosine == pytest.approx(1.0)
-
-
-def test_lsh_topk_exact_from_scan_identical(hot_family_vecs):
-    """The adaptive small-corpus exact branch (a second native scan of
-    the source instead of the persisted sketch table) must be a pure
-    physical-plan change: outputs byte-identical to the cache path,
-    including the capped hot family's star edges."""
-    kw = dict(k=2, n_bits=4, n_tables=4, dim=8, bucket_cap=50)
-    cache_path = sorted(
-        map(tuple, S.lsh_topk(hot_family_vecs, **kw).collect())
-    )
-    scan_path = sorted(
-        map(
-            tuple,
-            S.lsh_topk(hot_family_vecs, exact_from_scan=True, **kw).collect(),
-        )
-    )
-    assert cache_path == scan_path
 
 
 # -- text analysis ------------------------------------------------------------
@@ -1011,13 +988,20 @@ def test_label_centroid_outliers_planted_far_vector(spark):
         "source_kl_divergence",
         "lsh_recall_report",
         "media_byte_features",
+        "winnow_fingerprints",
+        "winnow_clone_pairs",
+        "embedding_dup_pairs",
+        "lsh_topk_planted",
+        "ivf_topk_exact",
+        "export_shard_plan",
     ],
 )
 def test_r5_new_ops_oracle_parity(spark, name):
     """The r5 additions (2-iteration integer-exact Lloyd, dup-graph
-    triangle counts, planted credential scan, c-TF-IDF source terms)
-    match their DuckDB twins value-for-value at sf0.001 under the
-    driver's sorted-columns protocol."""
+    triangle counts, planted credential scan, c-TF-IDF source terms),
+    the winnow kernel, the vector LSH / IVF paths and the global
+    cumsum match their DuckDB twins value-for-value at sf0.001, columns
+    sorted by name and rows sorted."""
     import duckdb
 
     import __spark_entry__ as entry_mod

@@ -324,7 +324,7 @@ def test_bpe_pairs_expand_from_vocab_not_corpus(spark):
 
 
 def test_export_shard_plan_exchange_budget(spark):
-    """export_shard_plan (default window impl): never a
+    """export_shard_plan: never a
     single-partition global cumsum — the Window node must be keyed by
     ``_pid`` and fed by the broadcast offset join, with the range
     Exchange as the only order-establishing corpus shuffle."""
@@ -346,28 +346,6 @@ def test_export_shard_plan_exchange_budget(spark):
     # shard_id; the corpus-ordering one on (source, doc_id) is gone)
     assert "Exchange rangepartitioning(source" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
-    caching.clear(blocking=True)
-
-
-def test_global_cumsum_arrow_impl_zero_extra_exchange(spark):
-    """The Arrow pass-2 twin (the shuffle-constrained-cluster pick):
-    NO Window node and NO hashpartitioning(_pid) Exchange — the corpus
-    crosses only the range Exchange; pass 2 is MapInPandas over the
-    already-sorted persisted partitions."""
-    from selfclean_spark import caching
-    from selfclean_spark.functions.rank import with_global_cumsum
-
-    caching.clear(blocking=True)
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "source", "doc_id", F.length("text").cast("long").alias("v")
-    )
-    out = with_global_cumsum(
-        df, [F.col("source").asc(), F.col("doc_id").asc()], "v", impl="arrow"
-    )
-    plan = _plan(out)
-    assert "MapInPandas" in plan, plan
-    assert "Window" not in plan, plan
-    assert "hashpartitioning(_pid" not in plan, plan
     caching.clear(blocking=True)
 
 

@@ -137,11 +137,9 @@ def test_with_global_rank_registers_no_persist(spark):
     )
 
 
-@pytest.mark.parametrize("impl", ["window", "arrow"])
-def test_with_global_cumsum_matches_single_partition_window(spark, impl):
+def test_with_global_cumsum_matches_single_partition_window(spark):
     """Two-pass partition-offset cumsum == the single-partition window
-    cumsum it replaces, on a skewed value column — for BOTH pass-2
-    implementations (JVM window and zero-extra-Exchange Arrow)."""
+    cumsum it replaces, on a skewed value column."""
     from selfclean_spark.functions.rank import with_global_cumsum
 
     df = spark.range(0, 500).select(
@@ -149,9 +147,7 @@ def test_with_global_cumsum_matches_single_partition_window(spark, impl):
     )
     got = {
         r.id: r.cumsum
-        for r in with_global_cumsum(
-            df, [F.col("id").asc()], "v", impl=impl
-        ).collect()
+        for r in with_global_cumsum(df, [F.col("id").asc()], "v").collect()
     }
     rows = sorted(df.collect(), key=lambda r: r.id)
     running = 0

@@ -33,11 +33,6 @@ def test_media_feature_extraction_plumbing(spark):
     np.testing.assert_array_equal(f1, f2)
 
 
-def test_decode_image_stub_raises():
-    with pytest.raises(NotImplementedError):
-        MM.decode_image(b"not-an-image")
-
-
 # -- code_files reader --------------------------------------------------------
 
 def test_read_code_files_parquet(spark, tmp_path):

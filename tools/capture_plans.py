@@ -33,6 +33,7 @@ TOUCHED = [
     "simhash_near_pairs",
     "source_overlap_pairs",
     "lsh_topk_ann",
+    "embedding_dup_pairs",
     "export_shard_plan",
     "source_novelty_report",
     "dedup_graph_triangles",
