@@ -17,13 +17,19 @@ distributed large-star/small-star connected-components pass.
 """
 
 from selfclean_spark.config import PipelineConfig, SignatureConfig
-from selfclean_spark.session import get_spark
 
 __all__ = ["PipelineConfig", "SelfCleanSpark", "SignatureConfig", "get_spark"]
 
 
 def __getattr__(name):
-    # lazy: the facade pulls in the full pipeline graph
+    # lazy: ``session`` imports pyspark, which the Python worker daemon
+    # (``functions.daemon``, started as ``python -m``) must import only
+    # after it has chosen where pyspark comes from; the facade pulls in
+    # the full pipeline graph
+    if name == "get_spark":
+        from selfclean_spark.session import get_spark
+
+        return get_spark
     if name == "SelfCleanSpark":
         from selfclean_spark.facade import SelfCleanSpark
 

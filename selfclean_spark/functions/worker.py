@@ -22,6 +22,12 @@ it already loaded keep their loader object, and an import that needs
 the path again rebuilds the importer from ``zipimport``'s own directory
 cache without re-reading the archive.  The next task's
 ``invalidate_caches`` then finds no zip importer to refresh.
+
+The package daemon (:mod:`selfclean_spark.functions.daemon`) drops the
+importers once before it forks, so a worker's first task inherits none.
+The per-task drop stays for the importers that imports during a task
+create, and for workers forked from ``pyspark.daemon`` (the daemon of a
+``--py-files`` run).
 """
 
 from __future__ import annotations

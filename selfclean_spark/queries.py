@@ -393,7 +393,7 @@ def lang_id_counts(spark, sf_dir):
     """Stopword-hit language-ID heuristic, aggregated."""
     d = _t(spark, sf_dir, "documents")
     toks = F.split(F.trim("text"), r"\s+")
-    en_hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(T.STOPWORDS)))
+    en_hits = F.size(F.filter(toks, T.is_stopword))
     predicted = F.when(en_hits >= 2, F.lit("en")).otherwise(F.lit("unknown"))
     return (
         d.select(predicted.alias("predicted_lang"))

@@ -2,16 +2,26 @@
 
 Arrow on (every executor-side Python crossing is an Arrow batch, never
 per-row), AQE + skew-join on (backstop for hot LSH bands / giant repos),
-and a shuffle-partition count sized for the sandbox.  On a real cluster
-these come from spark-submit conf; the builder only sets what is not
-already set so ``spark-submit --conf`` always wins.
+a shuffle-partition count sized for a small local machine, and Python workers
+forked from the warm daemon in :mod:`selfclean_spark.functions.daemon`.
+
+Conf precedence, highest first:
+
+1. ``get_spark(extra_conf=...)``;
+2. the conf the driver's JVM was started with outside this process
+   (``spark-submit --conf``, a pyspark shell's conf);
+3. ``_DEFAULTS``.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+from selfclean_spark.functions import daemon
 
 _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -40,7 +50,39 @@ _DEFAULTS = {
     "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
+    "spark.python.daemon.module": daemon.__name__,
 }
+
+
+def _daemon_importable() -> bool:
+    """Whether Spark can start :mod:`~selfclean_spark.functions.daemon`.
+
+    The daemon runs as ``python -m`` in the JVM's working directory (this
+    process's, for a local JVM) with the JVM's ``PYTHONPATH``.  Files that
+    ``--py-files`` ships reach a worker's path only inside a task, too late
+    for the daemon."""
+    if not os.path.isfile(daemon.__file__):  # imported from a zip
+        return False
+    root = os.path.realpath(os.path.join(os.path.dirname(daemon.__file__), "..", ".."))
+    path = [
+        os.getcwd(),
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        *site.getsitepackages(),
+    ]
+    return any(p and os.path.realpath(p) == root for p in path)
+
+
+def _submitted_conf() -> SparkConf | None:
+    """The conf spark-submit or a pyspark shell started the driver's JVM
+    with; ``None`` when this process launches its own JVM.
+
+    Those start the JVM first and hand this process its gateway port.
+    (A JVM this process launched carries its first session's options,
+    which must not outrank a later session's defaults.)"""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf()
 
 
 def get_spark(
@@ -52,13 +94,22 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores when
     unset) in the sandbox; under spark-submit the submitted master wins.
+    A ``_DEFAULTS`` key applies only where the submitted conf does not
+    carry it; ``extra_conf`` always applies.
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_GRAFT_CPUS" in os.environ:
+    submitted = _submitted_conf()
+
+    def default(key: str) -> bool:
+        return submitted is None or not submitted.contains(key)
+
+    if master is None and "SPARK_GRAFT_CPUS" in os.environ and default("spark.master"):
         master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
     if master is not None:
         builder = builder.master(master)
-    conf = dict(_DEFAULTS)
+    conf = {k: v for k, v in _DEFAULTS.items() if default(k)}
+    if not _daemon_importable():
+        conf.pop("spark.python.daemon.module", None)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

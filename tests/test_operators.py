@@ -338,6 +338,24 @@ def test_text_functions(spark):
     assert fps[0] == fps[1]
 
 
+def test_is_stopword_matches_lower_in(spark):
+    """ASCII case folding gives ``lower(t) IN STOPWORDS``'s answer, also on
+    the non-ASCII characters whose lowercase is or holds ASCII: U+0130,
+    the Kelvin sign U+212A, fullwidth letters and the dotless i."""
+    toks = [
+        "THE", "tHe", "the", "IS", "\u0130S", "\u0130s", "\u212a",
+        "\uff34\uff28\uff25", "\u0131s", "", "th\u00e9",
+    ]
+    df = spark.createDataFrame([(t,) for t in toks], "t string")
+    rows = df.select(
+        "t",
+        T.is_stopword(F.col("t")).alias("got"),
+        F.lower("t").isin(T.STOPWORDS).alias("want"),
+    ).collect()
+    assert [r.got for r in rows] == [r.want for r in rows]
+    assert {r.t for r in rows if r.got} == {"THE", "tHe", "the", "IS"}
+
+
 def test_quality_score_range(spark):
     df = spark.createDataFrame(
         [(0, "reasonable words " * 60), (1, "!!!! ???? ####"), (2, "ok")],
@@ -994,14 +1012,16 @@ def test_label_centroid_outliers_planted_far_vector(spark):
         "lsh_topk_planted",
         "ivf_topk_exact",
         "export_shard_plan",
+        "doc_stats",
+        "lang_id_counts",
     ],
 )
 def test_r5_new_ops_oracle_parity(spark, name):
     """The r5 additions (2-iteration integer-exact Lloyd, dup-graph
     triangle counts, planted credential scan, c-TF-IDF source terms),
-    the winnow kernel, the vector LSH / IVF paths and the global
-    cumsum match their DuckDB twins value-for-value at sf0.001, columns
-    sorted by name and rows sorted."""
+    the winnow kernel, the vector LSH / IVF paths, the global cumsum and
+    the two stopword queries match their DuckDB twins value-for-value at
+    sf0.001, columns sorted by name and rows sorted."""
     import duckdb
 
     import __spark_entry__ as entry_mod
